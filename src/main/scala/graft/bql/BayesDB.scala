@@ -205,7 +205,14 @@ final class BayesDB(val spark: SparkSession, val seed: Long = 42L,
     *  - `tableStore` set (the cluster-scale path): write the rowid'd
     *    table back to parquet ONCE and re-read it — every later query
     *    scans a real parquet source with filter pushdown, column
-    *    pruning, and file statistics. */
+    *    pruning, and file statistics.
+    *
+    * One-partition rule (cache path only): when the input has exactly one
+    * partition, the rowid'd frame is cached behind a narrow `coalesce(1)`.
+    * No data moves, but the cached scan then reports `SinglePartition`, so
+    * GROUP BY, HAVING, ORDER BY, windows and sort-merge joins over the table
+    * plan inside the scan's stage, without an exchange and its extra job.
+    * Multi-partition inputs keep their partitions (and parallelism). */
   def registerTable(name: String, df: DataFrame): Unit = {
     val key = Names.casefold(name)
     if (df.columns.exists(c => Names.casefold(c) == "rowid")) {
@@ -227,7 +234,11 @@ final class BayesDB(val spark: SparkSession, val seed: Long = 42L,
             withRowid.write.mode("overwrite").parquet(path)
             spark.read.parquet(path)
           case None =>
-            val cached = withRowid.cache()
+            // the partition count comes from the pinned scan's RDD, not
+            // from ensureRowid's per-partition counts, which omit empty
+            // partitions (and it runs no job: the pin is materialized)
+            val onePartition = pinned.rdd.getNumPartitions == 1
+            val cached = (if (onePartition) withRowid.coalesce(1) else withRowid).cache()
             cached.count()
             cached
         }
@@ -1167,7 +1178,9 @@ final class BayesDB(val spark: SparkSession, val seed: Long = 42L,
       (keptNames.zipWithIndex.map { case (g, i) => (g, beta(i + 1)) } ++
         droppedNames.map(d => (d, 0.0)))
     import spark.implicits._
-    rows.toDF("variable", "coefficient")
+    // one partition the planner knows of: ORDER BY / GROUP BY over the
+    // coefficients plan without an exchange
+    rows.toDF("variable", "coefficient").coalesce(1)
   }
 
   /** Solve A x = b by Gaussian elimination with partial pivoting (A is

@@ -17,11 +17,20 @@ import Ast._
   * (src/compiler.py:1059-1473): each query shape provides the implied
   * row/column expressions its estimators need.
   *
-  * Subquery policy (scale note): uncorrelated scalar/IN/EXISTS subqueries
-  * are evaluated at plan time and inlined as literals — in BQL these are
-  * metadata-sized by construction (column lists, rowid probes). Correlated
-  * subqueries are not supported (the reference's SQLite accepts them; we
-  * document the divergence — big-data joins should be written as joins).
+  * Subquery policy (README divergence D3):
+  *  - uncorrelated scalar subqueries are evaluated at plan time and
+  *    inlined as literals;
+  *  - uncorrelated IN / NOT IN / EXISTS that are top-level WHERE conjuncts
+  *    plan as left-semi / null-aware left-anti joins (EXISTS as a one-row
+  *    semi join), so the subquery result never reaches the driver; in a
+  *    nested position (e.g. under OR) EXISTS folds to a plan-time literal
+  *    and IN inlines its values, capped by `graft.bql.inlist.maxValues`;
+  *  - correlated subqueries decorrelate: aggregate scalars into grouped
+  *    left joins (equality correlation) or theta joins (any other
+  *    operator), with scalars sharing FROM, WHERE and key tuple folded into
+  *    one join; non-aggregate scalars, EXISTS and IN plan as native
+  *    Catalyst subquery expressions. Shapes with no well-defined
+  *    decorrelation are rejected with a named D3 error.
   */
 object Planner {
 
@@ -135,8 +144,10 @@ object Planner {
     }
     val schema = org.apache.spark.sql.types.StructType(items.map { case (n, _) =>
       org.apache.spark.sql.types.StructField(n, org.apache.spark.sql.types.DoubleType) })
+    // one slice, and a narrow coalesce so the planner knows it is one
+    // partition (an RDD scan reports unknown partitioning)
     bdb.spark.createDataFrame(
-      bdb.spark.sparkContext.parallelize(rows, 1), schema)
+      bdb.spark.sparkContext.parallelize(rows, 1), schema).coalesce(1)
   }
 
   /** Evaluate an expression against ONE ensemble member: BQL constant
@@ -225,7 +236,7 @@ object Planner {
       (alias, df)
     }
     val base =
-      if (tabs.isEmpty) bdb.spark.range(1).toDF("__dummy__")
+      if (tabs.isEmpty) oneRow(bdb)
       else tabs.map { case (a, df) => df.as(a) }.reduceLeft(_ crossJoin _)
     val scope = Scope(
       tabs.flatMap(_._2.columns).map(Names.casefold).toSet,
@@ -268,11 +279,17 @@ object Planner {
 
   private def planEstBy(bdb: BayesDB, e: EstBy, binds: Seq[Any]): DataFrame = {
     val pm = bdb.populationModel(e.population, e.generator, e.modelnos)
-    val base = bdb.spark.range(1).toDF("__dummy__")
+    val base = oneRow(bdb)
     val ctx = Ctx(bdb, ConstCtx(pm), binds, agg = false)
     assemble(base, Nil, e.columns, e.quantifier, None, None, Nil, None, ctx,
       starColumns = Nil)
   }
+
+  /** The one-row base of a FROM-less SELECT and of ESTIMATE ... BY: a
+    * one-slice Range, which plans as `SinglePartition` (`range(1)` would
+    * spread its row over `defaultParallelism` slices). */
+  private def oneRow(bdb: BayesDB): DataFrame =
+    bdb.spark.range(0, 1, 1, 1).toDF("__dummy__")
 
   /** Variables-of-population frame (reference compiles to a scan of
     * bayesdb_variable, src/compiler.py:844-919). */
@@ -284,6 +301,7 @@ object Planner {
     pm.visibleVariables
       .map(v => (v.name, v.colno, v.stattype.name))
       .toDF("name", "colno", "stattype")
+      .coalesce(1)  // one partition the planner knows of: no exchanges
       .as("v")
   }
 

@@ -229,8 +229,12 @@ object Estimators {
     // serialize on one core for large LIMITs (~1k rows per slice)
     val slices = math.max(1, math.min(
       spark.sparkContext.defaultParallelism, decoded.length / 1000))
-    spark.createDataFrame(
+    val df = spark.createDataFrame(
       spark.sparkContext.parallelize(decoded, slices), schema)
+    // an RDD scan reports unknown partitioning even over one slice; the
+    // narrow coalesce lets the planner see one partition and drop the
+    // exchanges of a GROUP BY / ORDER BY over a small sample
+    if (slices == 1) df.coalesce(1) else df
   }
 
   /** `INFER c WITH CONFIDENCE conf FROM p` — macro semantics
@@ -536,6 +540,7 @@ object Estimators {
     val vars = pm.visibleVariables.map(_.name)
     val rows = for (v0 <- vars; v1 <- vars)
       yield (pm.population.name, v0, v1, estimator(v0, v1))
-    rows.toDF("population", "name0", "name1", valueName)
+    // one partition the planner knows of (see `simulate`)
+    rows.toDF("population", "name0", "name1", valueName).coalesce(1)
   }
 }

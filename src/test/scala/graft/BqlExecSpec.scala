@@ -649,6 +649,21 @@ class BqlExecSpec extends AnyFunSuite {
     assert(df2.collect().forall(r => r.getDouble(0) == 0.0))  // nig: dep = 0
   }
 
+  test("driver-built frames report one partition: ORDER BY / GROUP BY need no shuffle") {
+    Seq(
+      "estimate * from variables of p1 order by name",
+      "estimate dependence probability from pairwise variables of p1 order by name0, name1",
+      "select age, count(*) as n from (simulate age from p1 limit 20) group by age order by age",
+      "select dp, count(*) as n from (simulate dependence probability of age with weight" +
+        " as dp from models of p1) group by dp order by dp",
+      "select 1 + 2 as x order by x"
+    ).foreach { q =>
+      val df = bdb.execute(q)
+      assert(df.collect().nonEmpty, q)
+      assert(FinalShuffles(df) == 0, s"$q\n${df.queryExecution.executedPlan}")
+    }
+  }
+
   test("alter generator: ensure variables dependent/independent/view moves") {
     import spark.implicits._
     val rng = new scala.util.Random(9)

@@ -776,3 +776,87 @@ class WidePopulationSpec extends AnyFunSuite {
     assert(viaBroadcast == viaSmj, "gate branches must agree row-for-row")
   }
 }
+
+/** Shuffles in a DataFrame's final (post-AQE) physical plan, read after it
+  * ran: the exchanges EnsureRequirements planned and AQE kept. */
+object FinalShuffles extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
+  def apply(df: org.apache.spark.sql.DataFrame): Int =
+    collect(df.queryExecution.executedPlan) {
+      case s: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => s
+    }.size
+}
+
+/** The one-partition rule of `BayesDB.registerTable`: a table registered
+  * from a one-partition frame is cached behind a narrow `coalesce(1)`, so
+  * its scan reports `SinglePartition` and a GROUP BY + HAVING + ORDER BY
+  * over it plans with no shuffle and runs as one Spark job. A
+  * multi-partition table keeps its partitions and its shuffles. */
+class OnePartitionTableSpec extends AnyFunSuite {
+  import TestSpark._
+  import java.util.concurrent.atomic.AtomicInteger
+  import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+  import org.apache.spark.sql.DataFrame
+
+  private val group = "one-partition-table-spec"
+
+  /** 40 rows over `parts` slices of an RDD scan, which (like a file scan)
+    * reports unknown partitioning, even over one slice; values are small
+    * integers, so sums are exact whatever the aggregation order. */
+  private def frame(parts: Int): DataFrame = {
+    import spark.implicits._
+    spark.sparkContext.parallelize(
+      (0 until 40).map(i => (i.toLong, (i % 4).toString, i * 2.0)), parts)
+      .toDF("k", "grp", "x")
+  }
+
+  private def sql(table: String): String =
+    s"select grp, count(*) as n, sum(x) as s from $table" +
+      " group by grp having count(*) > 5 order by grp"
+
+  /** Collects `df`; returns its rows and the number of Spark jobs the
+    * collect ran. */
+  private def run(df: DataFrame): (Seq[Seq[Any]], Int) = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group) jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "one-partition table spec")
+    val rows = try df.collect().toSeq.map(_.toSeq) finally sc.clearJobGroup()
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.removeSparkListener(listener)
+    (rows, jobs.get)
+  }
+
+  private def expected(df: DataFrame, view: String): Seq[Seq[Any]] = {
+    df.createOrReplaceTempView(view)
+    spark.sql(sql(view)).collect().toSeq.map(_.toSeq)
+  }
+
+  test("one-partition table: GROUP BY + HAVING + ORDER BY plans no shuffle, runs one job") {
+    val b = new BayesDB(spark, seed = 17L)
+    val raw = frame(1)
+    b.registerTable("one", raw)
+    assert(b.table("one").rdd.getNumPartitions == 1)
+    val df = b.execute(sql("one"))
+    val (rows, jobs) = run(df)
+    assert(FinalShuffles(df) == 0, "a one-partition table needs no exchange")
+    assert(jobs == 1, s"expected one Spark job, saw $jobs")
+    assert(rows == expected(raw, "one_raw"))
+    assert(rows.map(_.head) == Seq("0", "1", "2", "3"))
+  }
+
+  test("multi-partition table keeps its partitions and its shuffle") {
+    val b = new BayesDB(spark, seed = 17L)
+    val raw = frame(4)
+    b.registerTable("four", raw)
+    assert(b.table("four").rdd.getNumPartitions == 4)
+    val df = b.execute(sql("four"))
+    val (rows, _) = run(df)
+    assert(FinalShuffles(df) > 0, "a 4-partition table still plans its shuffle")
+    assert(rows == expected(raw, "four_raw"))
+  }
+}
