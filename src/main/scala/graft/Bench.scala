@@ -3,30 +3,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // bench the streaming keys against the state-store provider the
-      // operators document for 100-TB state, not only the in-memory
-      // default — the recorded state_rows then describe the production
-      // pairing
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      // r15 bench-inflation arbitration (r16): the generated-class cache
-      // (StaticSQLConf CODEGEN_CACHE_MAX_ENTRIES) defaults to 100 — far
-      // below this suite's ~150 keys × several codegen stages each, so
-      // by pass 2 every key was paying janino recompiles of classes it
-      // compiled in pass 1. That thrash grew WITH SUITE SIZE, which is
-      // why r15 (148 keys) read uniformly ~1.25× of r14 (124) on keys
-      // whose code never changed, q-keys least (few stages), BQL keys
-      // worst (b01 0.43→1.01). A/B at 152 keys: 87.9 s → 73.3 s suite,
-      // b01 back to 0.30. Sized to hold every stage of a few hundred
-      // keys; memory cost is class metadata, not heap data.
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // absorb session warmup (codegen, shuffle service, first-job setup)
     // so the first map entry isn't charged ~5s of JVM cost
     spark.range(1000000).selectExpr("sum(id)").collect()

@@ -1,7 +1,6 @@
 package graft
 
 import graft.bql.{BayesDB, Parser}
-import org.apache.spark.sql.SparkSession
 
 import scala.io.StdIn
 
@@ -28,14 +27,7 @@ import scala.io.StdIn
 object Shell {
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-shell")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val bdb = new BayesDB(spark)
     val rc = try {
       if (args.nonEmpty) { args.foreach(runFile(bdb, _)); 0 }

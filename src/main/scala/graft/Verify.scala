@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Current round number for artifact naming, shared by Bench and
@@ -24,18 +23,7 @@ object Verify {
     // optional 3rd arg: comma-separated key subset for local iteration
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // same suite-scale codegen-cache sizing as Bench (the det-gate
-      // second pass re-plans every rows-only key — recompiling ~150
-      // keys' stages through a 100-entry cache was pure waste)
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     // failures are recorded as an explicit artifact, not only stderr: a
     // thrown query previously produced a silent OMISSION in the round's

@@ -92,10 +92,8 @@ object Dedup {
     * over compressed input: HTML extraction, n-gram pair explosion) —
     * 64 KB of parquet ≈ 0.1–0.5 s of work, enough to amortize a task,
     * small enough that a 1 GB unsplittable file still fans out to
-    * every core. Env-tunable for other storage/kernel ratios. */
-  private[graft] def spreadHeavyBytes: Long =
-    sys.env.get("SPARK_GRAFT_SPREAD_TARGET_BYTES").map(_.trim.toLong)
-      .filter(_ > 0L).getOrElse(64L * 1024)
+    * every core. */
+  private val spreadHeavyBytes: Long = 64L * 1024
 
   /** Per-task byte budget for LIGHT kernels (tokenizers, hashes,
     * per-line splits — tens of MB/s/core): below ~4 MB of source the
@@ -103,9 +101,7 @@ object Dedup {
     * parallelism returns (measured at 32 cores: every light key ran
     * faster with the sf0.1 594 KB table UNSPREAD), while a multi-GB
     * unsplittable file still reaches full width. */
-  private[graft] def spreadLightBytes: Long =
-    sys.env.get("SPARK_GRAFT_SPREAD_LIGHT_BYTES").map(_.trim.toLong)
-      .filter(_ > 0L).getOrElse(4L * 1024 * 1024)
+  private val spreadLightBytes: Long = 4L * 1024 * 1024
 
   /** Distributed in-bucket pair emission: rows carrying `("id" +: carry)`
     * grouped into buckets by `keys`, emitting every unordered in-bucket
@@ -424,8 +420,8 @@ object Dedup {
   private[operators] def cacheSignedShared(df: DataFrame): DataFrame =
     cacheSigned(df)
 
-  /** Profiling hook: the signature stage alone (cached), for stage-level
-    * attribution in `graft.Profile`. */
+  /** The signature stage alone, through the one-slot signature cache —
+    * the seam the cache's replacement rule is tested through. */
   private[graft] def minHashSignedForProfile(
       df: DataFrame, textCol: String, idCol: String,
       numHashes: Int = 128, shingleSize: Int = 3, seed: Long = 42L): DataFrame =
@@ -670,7 +666,7 @@ object Dedup {
       // 4M edges collect as (Long, Long) tuples (~48 B/edge) ≈ 200 MB
       // plus the distinct-ids array — comfortably inside the 24g
       // driver — and the bound keeps the adversarial 100×-replica
-      // probe dir (1.52M edges measured, EdgeCountProbe r16) on the
+      // probe dir (1.52M edges measured in r16) on the
       // O(E·α) union-find path instead of the straggler-noisy
       // label-prop loop it tipped into at the old 1M bound
       maxIter: Int = 20, driverMaxEdges: Long = 1L << 22): DataFrame = {

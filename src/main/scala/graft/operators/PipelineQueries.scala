@@ -33,23 +33,13 @@ object PipelineQueries {
   private val candsCache =
     scala.collection.concurrent.TrieMap.empty[String, DataFrame]
 
-  /** Drop the per-dir candidate/index/media caches (unpersisting their
-    * pinned frames) so the determinism gate's second pass rebuilds each
-    * from the raw parquet under the same seed. */
+  /** Drop the per-dir operator caches plus the media fixture
+    * (unpersisting their pinned frames) so the determinism gate's second
+    * pass rebuilds each from the raw parquet under the same seed. */
   private[graft] def resetForDeterminism(): Unit = {
-    candsCache.values.foreach(_.unpersist())
-    candsCache.clear()
-    ivfCache.values.foreach(_.cells.unpersist())
-    ivfCache.clear()
+    resetOperatorCaches()
     mediaCache.values.foreach(_.unpersist())
     mediaCache.clear()
-    bpeCache.clear()
-    kmeansCache.clear()
-    Dedup.resetCaches() // the one-slot signature cache
-    Relational.resetSkewProbeCache() // q18's memoized skew stat
-    TextAnalysis.resetLmModelCache() // the fitted bigram-LM memo
-    resetP38Stages()
-    resetCheckpoints()
   }
 
   /** Stage-boundary caches (p38's curation chain, p86's crawl chain —
@@ -88,10 +78,6 @@ object PipelineQueries {
     * scored frame in [[TextAnalysis.ccnetLangBuckets]] — computed once,
     * read by the histogram collect and the three verdict branches). */
   private[graft] def stageCache(df: DataFrame): DataFrame = p38Stage(df)
-
-  /** Probe-tool access to the shared candidate pipeline. */
-  private[graft] def minhashCandsForProbe(spark: SparkSession, dir: String): DataFrame =
-    minhashCandsFor(spark, dir)
 
   private def minhashCandsFor(spark: SparkSession, dir: String): DataFrame =
     candsCache.getOrElseUpdate(dir, {
@@ -873,11 +859,6 @@ object PipelineQueries {
     * contains `<` and a fake tag in a string, an HTML comment hiding a
     * div, entities (incl. the &amp;lt; double-decode trap), and on even
     * ids a CDATA section plus extra entity text. */
-  /** Profiling accessor for [[p35FixtureHtml]] (stage attribution in
-    * [[graft.tools.P38Profile]]). */
-  private[graft] def p35FixtureHtmlForProfile: org.apache.spark.sql.Column =
-    p35FixtureHtml
-
   private def p35FixtureHtml: org.apache.spark.sql.Column = concat(
     lit("<html><head><title>Doc "), col("doc_id").cast("string"),
     lit("</title><style type=\"text/css\">body { color: red; } /* <p>not text</p> */</style>" +
@@ -4177,7 +4158,7 @@ object PipelineQueries {
     // spanDupStats scans fin 2×, and the counts MULTIPLY through the
     // stage joins), turning a ~1 s sum-of-stages into ~11 s; and with a
     // plain cache() every one of the key's ~20 actions still re-ANALYZED
-    // the full chain (warm JobProfile: 2.19 s wall, 1.10 s in jobs).
+    // the full chain (warm, per-job listener: 2.19 s wall, 1.10 s in jobs).
     // localCheckpoint has the same MEMORY_AND_DISK footprint as the
     // cache it replaces, so the 100× probe regime is unchanged; the
     // boundary is the local analogue of the intermediate parquet
@@ -4767,7 +4748,7 @@ object PipelineQueries {
     bpeCache.clear()
     kmeansCache.clear()
     Dedup.resetCaches()
-    Relational.resetSkewProbeCache()
+    Relational.resetSkewStatCache()
     TextAnalysis.resetLmModelCache()
     resetP38Stages()
     resetCheckpoints()

@@ -417,7 +417,7 @@ object Relational {
   private val skewProbeCache =
     scala.collection.concurrent.TrieMap.empty[(Int, String), Long]
 
-  private[graft] def resetSkewProbeCache(): Unit = skewProbeCache.clear()
+  private[graft] def resetSkewStatCache(): Unit = skewProbeCache.clear()
 
   def sessionize(events: DataFrame,
       gapUs: Long = 1800L * 1000000L,

@@ -765,11 +765,6 @@ object SimilaritySearch {
     IvfSq8Index(index.centroids, params, cells)
   }
 
-  /** Probe-tool access to the composite's cell routing (scan-volume
-    * accounting in `graft.tools.IvfSq8Probe`). */
-  private[graft] def probeCellsFor(index: IvfSq8Index, query: Seq[Double],
-      nProbe: Int): Seq[Int] = nearestCells(index.centroids, query, nProbe)
-
   /** IVF-SQ8 search: route to the `nProbe` nearest cells, scan ONLY
     * those cells' CODES against the float query
     * ([[graft.functions.Sq8CosineQuery]], one codegen'd pass — scan

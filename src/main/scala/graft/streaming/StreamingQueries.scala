@@ -73,9 +73,7 @@ object StreamingQueries {
   /** Per-task byte budget for the stream-source spread — the per-batch
     * map kernels these sources feed (MinHash signatures, LM scoring,
     * PII regex scan) sit between the batch light/heavy classes. */
-  private def streamSpreadBytes: Long =
-    sys.env.get("SPARK_GRAFT_STREAM_SPREAD_BYTES").map(_.trim.toLong)
-      .filter(_ > 0L).getOrElse(64L * 1024)
+  private val streamSpreadBytes: Long = 64L * 1024
 
   /** The documents table as a bounded file stream with the synthetic
     * event-time column. The streaming file source needs a DIRECTORY base
@@ -90,43 +88,33 @@ object StreamingQueries {
         timestamp_seconds(lit(EpochBase) + (col("doc_id") * 37) % 600))
   }
 
-  /** Start `w` against a fresh memory sink, drain the bounded source,
-    * stop, and return the sink table. The streaming state store opens
-    * one provider per shuffle partition and these rollups hold ~tens of
-    * keys — a handful of partitions is the right state layout (the conf
-    * is read at query START, so the scope-and-restore only affects this
-    * query; at real corpus scale the caller sizes this knob to its key
-    * cardinality). */
   /** Final state-store row count per streaming key, captured from the
     * last progress record of the most recent drain — the bench persists
     * these so "state stays bounded" is a driver-record claim, not only
     * a unit-test one. */
   val lastStateRows = scala.collection.concurrent.TrieMap.empty[String, Long]
 
+  /** State partitions of every drained stream: the streaming state
+    * store opens one provider per shuffle partition and these rollups
+    * hold ~tens of keys, so a handful of partitions is the right state
+    * layout. */
+  private val StateParts = 4
+
+  /** Start `w` against a fresh memory sink, drain the bounded source,
+    * stop, and return the sink table. The state-layout confs are read at
+    * query START, so the scope-and-restore only affects this query. */
   private def drainToMemory(spark: SparkSession, key: String,
       w: DataStreamWriter[Row]): DataFrame = {
     val sink = s"graft_${key}_${runCounter.incrementAndGet()}"
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    // the knob the doc above promises the caller: at testdata scale 4
-    // state partitions are right (tens of keys per provider); a scale
-    // probe over 10^7 events raises it so the stateful stage is not
-    // serialized 4-ways
-    val raw = sys.env.getOrElse("SPARK_GRAFT_STREAM_SHUFFLE", "4")
-    // fail at the knob, not with an opaque planner error mid-query
-    val stateParts = scala.util.Try(raw.trim.toInt).getOrElse(
-      throw new IllegalArgumentException(
-        s"SPARK_GRAFT_STREAM_SHUFFLE must be a positive integer, got '$raw'"))
-    require(stateParts > 0,
-      s"SPARK_GRAFT_STREAM_SHUFFLE must be a positive integer, got '$raw'")
     // stream-stream join state format v3 (r19): ONE RocksDB store per
     // partition holding virtual column families instead of FOUR stores
     // (2 sides × keyToNumValues/keyWithIndexToValue) — st11 profiled
     // its per-batch cost as 16 store instances' snapshot/fsync commits;
     // v3 quarters the instance count at ANY scale. RocksDB-only by
     // Spark's own contract, so it is set exactly when the session runs
-    // the documented RocksDB production pairing (the in-memory spec
-    // provider keeps the default format). Env-overridable; the conf is
-    // read at query start, so the scope-and-restore stays per-drain.
+    // the documented RocksDB production pairing (an HDFS-backed
+    // provider keeps the default format 2).
     val joinV3 = spark.conf.getOption(
         "spark.sql.streaming.stateStore.providerClass")
       .exists(_.contains("RocksDB"))
@@ -134,9 +122,8 @@ object StreamingQueries {
     val prevJoinFmt = spark.conf.getOption(joinFmtKey)
     val q =
       try {
-        spark.conf.set("spark.sql.shuffle.partitions", stateParts.toString)
-        if (joinV3) spark.conf.set(joinFmtKey,
-          sys.env.getOrElse("SPARK_GRAFT_JOIN_STATE_FORMAT", "3"))
+        spark.conf.set("spark.sql.shuffle.partitions", StateParts.toString)
+        if (joinV3) spark.conf.set(joinFmtKey, "3")
         // sessionWindow.merge.sessions.in.local.partition measured and
         // NOT adopted (r19 A/B at 32 cpus: st06 2.7→3.9 s, st07
         // 2.9→3.3 s warm) — these streams' sessions are mostly

@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.backends.DetRng
 import graft.functions.AudioSpectralHash
-import org.apache.spark.sql.SparkSession
 
 /** One-shot generator for the checked-in audio fixture
   * (`fixtures/audio_fixture.parquet`): real RIFF/WAVE payloads whose
@@ -106,9 +105,7 @@ object AudioFixture {
 
   def main(args: Array[String]): Unit = {
     val outDir = if (args.length > 0) args(0) else "/root/repo/fixtures"
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     import spark.implicits._
     val rs = rows()
     rs.foreach(r => println(f"${r.doc_id}%3d ${r.kind}%-22s defined=${r.fp_defined} fp=0x${r.fp}%016x"))

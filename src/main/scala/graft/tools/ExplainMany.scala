@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev scratch: dump `explain("formatted")` for a list of SparkEntry keys
   * to `<outDir>/<key>_<suffix>.txt` — the optimization-round plan-evidence
   * capture (plans/r18). Batch keys only: a streaming key's Q runs the
@@ -14,14 +12,7 @@ object ExplainMany {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, suffix, keyCsv) = args
     val keys = keyCsv.split(",").toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local()
     new java.io.File(outDir).mkdirs()
     keys.foreach { key =>
       val df = graft.SparkEntry.queries(key)(spark, sfDir)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import java.awt.image.BufferedImage
 import java.io.ByteArrayOutputStream
 import javax.imageio.ImageIO
@@ -128,12 +126,7 @@ object MediaFixture {
 
   def main(args: Array[String]): Unit = {
     val outDir = if (args.nonEmpty) args(0) else "/root/repo/fixtures"
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     import spark.implicits._
     spark.createDataset(rows()).toDF()
       .coalesce(1).write.mode("overwrite")

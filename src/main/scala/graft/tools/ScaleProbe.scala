@@ -181,14 +181,7 @@ object ScaleProbe {
     // expensive keys at 100×) — only their tables get replicated
     val probeKeys =
       if (args.length > 3) args(3).split(",").toSeq else ProbeKeys
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     // per-table reuse must be factor-guarded: a dir partially built at
     // one factor silently completed at another would print a probe
     // table mixing scales under one heading. A dir that already holds

@@ -2,8 +2,6 @@ package graft.tools
 
 import java.io.ByteArrayOutputStream
 
-import org.apache.spark.sql.SparkSession
-
 /** Generates the checked-in VIDEO fixture
   * (`fixtures/video_fixture.parquet`): GVID containers (magic + u32be
   * frame count + per frame u32be length + PNG bytes) whose per-frame
@@ -110,9 +108,7 @@ object VideoFixture {
 
   def main(args: Array[String]): Unit = {
     val outDir = if (args.length > 0) args(0) else "/root/repo/fixtures"
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     import spark.implicits._
     val vids = rows()
     vids.toDS().toDF()

@@ -3,8 +3,6 @@ package graft.tools
 import java.io.{ByteArrayOutputStream, FileOutputStream}
 import java.util.zip.GZIPOutputStream
 
-import org.apache.spark.sql.SparkSession
-
 /** Generates the checked-in WARC fixture: real `.warc.gz` layout (one
   * gzip member PER RECORD, members concatenated — the Common Crawl
   * shape, which exercises GZIPInputStream's multi-member handling) plus
@@ -143,9 +141,7 @@ object WarcFixture {
       expected += ((name, 1L, false, null, null, null, null, null, null))
     }
 
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     import spark.implicits._
     expected.toSeq
       .toDF("file", "rec_idx", "ok", "warc_type", "record_id", "target_uri",

@@ -954,4 +954,8 @@ class BqlExecSpec extends AnyFunSuite {
       assert(df.collect().map(_.getLong(0)).nonEmpty)
     }
   }
+
+  test("the flagship entry returns rows at sf0.001") {
+    assert(SparkEntry.entry(spark).count() > 0)
+  }
 }

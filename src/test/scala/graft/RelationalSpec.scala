@@ -4,20 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      // local[threads, maxTaskFailures]: allow ONE task retry so
-      // DeterminismSpec can prove sampling replays bit-identically after
-      // a task re-execution (DetRng's whole contract)
-      .master("local[4, 2]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // one task retry: DeterminismSpec proves sampling replays
+  // bit-identically after a task re-execution (DetRng's whole contract)
+  lazy val spark: SparkSession = GraftSession.local(cores = 4, taskRetries = 2)
   val sf: String = "/root/testdata/sf0.001"
 }
 

@@ -261,7 +261,8 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     // the production pairing the operator documents for 100-TB state:
     // prove the same query runs (and folds correctly) on RocksDB-backed
-    // state, not only the default in-memory provider
+    // state — set explicitly, so the pin holds whatever the session's
+    // default provider is
     val key = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key,
@@ -748,5 +749,26 @@ class StreamingSpec extends AnyFunSuite {
         latest(("g", "p50")))
       assert(batch.nonEmpty) // silence unused; full-sample path covered in PipelineSpec
     } finally q.stop()
+  }
+
+  test("st11's stream-stream join emits the same rows on join state format 2 and 3") {
+    // the session runs RocksDB, under which the drain selects join state
+    // format v3; the HDFS-backed provider keeps Spark's default v2
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prev = spark.conf.getOption(key)
+    def run(provider: String): (Long, String) = {
+      spark.conf.set(key, s"org.apache.spark.sql.execution.streaming.state.$provider")
+      val df = streaming.StreamingQueries.queries("st11_stream_stream_join")(spark, sf)
+      (df.count(), Verify.canonicalHash(df))
+    }
+    try {
+      val (n2, v2) = run("HDFSBackedStateStoreProvider")
+      val (n3, v3) = run("RocksDBStateStoreProvider")
+      assert(n2 > 0, "st11 emitted no rows")
+      assert((n3, v3) == ((n2, v2)), s"format 3 ($n3 rows) differs from format 2 ($n2 rows)")
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
   }
 }
