@@ -32,14 +32,11 @@ object Tables {
     "embeddings" -> Seq("vec_id"))
 
   // events needs a session conf flipped during its (lazy) execution; cache
-  // the materialized frame once per dir so the flag never leaks into other
-  // reads and repeated loads don't re-materialize.
-  private val eventsCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
+  // the materialized frame once per dir (session lifetime) so the flag
+  // never leaks into other reads and repeated loads don't re-materialize.
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     if (name == "events") {
-      eventsCache.getOrElseUpdate(sfDir, {
+      Memo.events.getOrElseUpdate(sfDir) {
         // events.ts has shipped as two physical encodings across testdata
         // generations: parquet TIMESTAMP(NANOS) (which the vectorized reader
         // rejects — read nanos as long under the legacy flag and convert;
@@ -72,11 +69,8 @@ object Tables {
           case Some(v) => spark.conf.set(key, v)
           case None    => spark.conf.unset(key)
         }
-      })
+      }
     } else spark.read.parquet(s"$sfDir/$name.parquet")
-
-  private val rowidCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
 
   /** Load with a 1-based deterministic `rowid` column (SQLite semantics:
     * rowids start at 1), numbered in natural-key order. Distributed
@@ -88,10 +82,10 @@ object Tables {
     * task at scale. The sorted instance is pinned with a cache while
     * the counts job and the numbering job run (range boundaries are
     * sampled and could otherwise differ between the two), and results
-    * are memoized per (dir, table) so repeated loads see identical
-    * rowids without renumbering. */
+    * are memoized per (dir, table), with session lifetime, so repeated
+    * loads see identical rowids without renumbering. */
   def loadWithRowid(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    rowidCache.getOrElseUpdate((sfDir, name), {
+    Memo.rowids.getOrElseUpdate((sfDir, name)) {
       val df = load(spark, sfDir, name)
       val key = naturalKey.getOrElse(name, Seq(df.columns.head))
       val sorted = df.orderBy(key.map(col): _*).cache()
@@ -112,17 +106,7 @@ object Tables {
         cached.count()
         cached
       } finally sorted.unpersist(blocking = false)
-    })
-
-  /** Drop the memoized events/rowid frames (unpersisting them) so the
-    * determinism gate's second pass re-materializes and renumbers from
-    * the raw parquet. */
-  private[graft] def resetForDeterminism(): Unit = {
-    eventsCache.values.foreach(_.unpersist(blocking = false))
-    eventsCache.clear()
-    rowidCache.values.foreach(_.unpersist(blocking = false))
-    rowidCache.clear()
-  }
+    }
 
   /** Register all tables of a scale-factor dir as temp views. */
   def registerAll(spark: SparkSession, sfDir: String): Unit =

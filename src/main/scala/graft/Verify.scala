@@ -1,20 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
 
-/** Current round number for artifact naming, shared by Bench and
-  * Verify: max driver-written `<marker>_r{N}.json` in cwd + 1 (each
-  * tool keys on ITS OWN artifact family, which the driver writes only
-  * AFTER the round's run), overridable with GRAFT_ROUND for re-runs
-  * after the round's file has landed (otherwise a post-hoc gate re-run
-  * would stamp the NEXT round's slot). */
-private[graft] object RoundInference {
-  def current(marker: String): Int =
-    sys.env.get("GRAFT_ROUND").map(_.toInt).getOrElse {
-      Option(new java.io.File(".").listFiles()).toSeq.flatten
-        .flatMap(f => s"^${marker}_r(\\d+)\\.json$$".r.findFirstMatchIn(f.getName))
-        .map(_.group(1).toInt).maxOption.getOrElse(0) + 1
-    }
-}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -78,10 +64,7 @@ object Verify {
         None
       }
     }.toMap
-    operators.BqlQueries.resetForDeterminism()
-    operators.ModelQueries.resetForDeterminism()
-    operators.PipelineQueries.resetForDeterminism()
-    Tables.resetForDeterminism()
+    Memo.resetAll()
     spark.catalog.clearCache()
     val det = scala.collection.mutable.LinkedHashMap.empty[String, Boolean]
     // a key whose dump cannot be read back was never det-checked — that
@@ -102,29 +85,6 @@ object Verify {
     val detJson = det
       .map { case (k, v) => s"${q(k)}: $v" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/det_match.json"), detJson)
-    // r13 verdict #4: the determinism-gate result previously lived only
-    // in the transient outDir — persist a per-round copy in the repo cwd
-    // (next to CORRECTNESS_r{N}.json, same round-numbering convention as
-    // Bench) so the rows-only evidence is auditable without re-running
-    // the gate. Full runs only — a key-subset iteration must not
-    // masquerade as the round's gate artifact.
-    if (only.isEmpty) {
-      val round = RoundInference.current("CORRECTNESS")
-      val wrapped = s"""{"sf": ${q(sfDir)}, "det_match": $detJson, "failures": $failJson}"""
-      // r15 verdict #5: one artifact PER SF (a second-SF run previously
-      // overwrote the first, so "gated at both SFs" was prose, not an
-      // artifact). The sf-suffixed file is always written; the legacy
-      // unsuffixed name is kept for the driver's own sf0.01 run.
-      val sfBase = Paths.get(sfDir).getFileName.toString
-      val names = Seq(f"det_match_r$round%02d_$sfBase.json") ++
-        (if (sfBase == "sf0.01") Seq(f"det_match_r$round%02d.json") else Nil)
-      names.foreach { n =>
-        try Files.writeString(Paths.get(n), wrapped)
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] could not write $n: ${e.getMessage}")
-        }
-      }
-    }
     spark.stop()
   }
 

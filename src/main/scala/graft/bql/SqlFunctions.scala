@@ -1,6 +1,7 @@
 package graft.bql
 
 import graft.functions.SpecialMath
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -26,17 +27,26 @@ object SqlFunctions {
   def factorialFn(n: Int): Double =
     if (n < 0) Double.NaN else gammaFn(n + 1.0)
 
-  /** Register the math UDF surface on the session (idempotent). */
+  /** Register the math UDF surface on the session, once: every
+    * `BayesDB` calls this, and a session that already has all eight
+    * functions keeps its registrations (re-registering would replace
+    * each function's builder and log a warning per function). */
   def register(spark: SparkSession): Unit = {
-    spark.udf.register("erf", (x: Double) => SpecialMath.erf(x))
-    spark.udf.register("erfc", (x: Double) => SpecialMath.erfc(x))
-    spark.udf.register("gamma", (x: Double) => gammaFn(x))
-    spark.udf.register("lgamma", (x: Double) => SpecialMath.lgamma(x))
-    spark.udf.register("ldexp", (x: Double, i: Int) => x * math.pow(2.0, i))
-    spark.udf.register("copysign", (x: Double, y: Double) => math.copySign(x, y))
-    spark.udf.register("fmod", (x: Double, y: Double) => x % y)
-    spark.udf.register("fabs", (x: Double) => math.abs(x))
+    val registry = spark.sessionState.functionRegistry
+    if (!UdfNames.forall(n => registry.functionExists(FunctionIdentifier(n)))) {
+      spark.udf.register("erf", (x: Double) => SpecialMath.erf(x))
+      spark.udf.register("erfc", (x: Double) => SpecialMath.erfc(x))
+      spark.udf.register("gamma", (x: Double) => gammaFn(x))
+      spark.udf.register("lgamma", (x: Double) => SpecialMath.lgamma(x))
+      spark.udf.register("ldexp", (x: Double, i: Int) => x * math.pow(2.0, i))
+      spark.udf.register("copysign", (x: Double, y: Double) => math.copySign(x, y))
+      spark.udf.register("fmod", (x: Double, y: Double) => x % y)
+      spark.udf.register("fabs", (x: Double) => math.abs(x))
+    }
   }
+
+  private val UdfNames =
+    Seq("erf", "erfc", "gamma", "lgamma", "ldexp", "copysign", "fmod", "fabs")
 
   /** Aggregate function names (SQLite's complete aggregate surface). */
   val aggregateNames: Set[String] =

@@ -4,8 +4,6 @@ import graft.Tables
 import graft.bql.BayesDB
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import scala.collection.concurrent.TrieMap
-
 /** The BQL text surface, driver-checkable: each query is a BQL string
   * executed through the parser + planner (graft.bql), over the same
   * parquet tables the rest of the inventory uses. SQL-expressible
@@ -17,17 +15,11 @@ object BqlQueries {
 
   type Q = (SparkSession, String) => DataFrame
 
-  /** One engine per scale-factor dir: tables registered once (rowid
-    * materialization scans each table once), model lifecycle run once. */
-  private val cache = TrieMap.empty[String, BayesDB]
-
-  /** Drop the fitted engines so the next query refits from scratch —
-    * the determinism gate re-runs every rows-only key against a fresh
-    * fit under the same seed. */
-  private[graft] def resetForDeterminism(): Unit = cache.clear()
-
+  /** One engine per scale-factor dir, with session lifetime: tables
+    * registered once (rowid materialization scans each table once),
+    * model lifecycle run once. */
   def bdb(spark: SparkSession, dir: String): BayesDB =
-    cache.getOrElseUpdate(dir, {
+    graft.Memo.engines.getOrElseUpdate(dir) {
       val b = new BayesDB(spark, seed = 42L)
       // register concurrently: each table's rowid pass is its own small
       // Spark job, and per-job latency — not data volume — dominates at
@@ -103,7 +95,7 @@ object BqlQueries {
         "subproblems (row clustering, variable hyperparameters))")
       b.execute("analyze nrgen for 1 iteration (skip n_regionkey)")
       b
-    })
+    }
 
   /** b01: BQL SELECT with filter + group + having + order (the pricing
     * summary shape through the parser/planner path). */

@@ -283,7 +283,7 @@ object Dedup {
     // one cached signature table for both sides: banding reads it once,
     // the est rejoin twice (the one-slot registry evicts the previous
     // call's cache, same lifecycle as minHashCandidates)
-    val signed = cacheSigned(
+    val signed = graft.Memo.signatures.pin(
       sigOf(newDocs, 1).unionByName(sigOf(prior, 0)))
     def banded(side: Int, idName: String): DataFrame = signed
       .filter(col("side") === side)
@@ -366,66 +366,12 @@ object Dedup {
   private def minHashSignature(numHashes: Int, shingleSize: Int, seed: Long): Column => Column =
     text => graft.functions.MinHashSignature(text, numHashes, shingleSize, seed)
 
-  /** One-slot lifecycle for the cached signature table: the result frame
-    * is lazy, so the cache can't be dropped inside the call — instead
-    * each new signature build evicts the previous one, so a long session
-    * of repeated minHashCandidates calls holds at most ONE cached
-    * signature table instead of accumulating them until executor storage
-    * evicts under pressure. Unpersisting a plan a caller still holds is
-    * safe (it recomputes), and `blocking = false` keeps eviction off the
-    * query path. */
-  private val lastSigned = new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
-  private def cacheSigned(df: DataFrame): DataFrame = {
-    val cached = df.cache()
-    val prev = lastSigned.getAndSet(cached)
-    // plan-identity guard: the cache registry is keyed by logical plan, so
-    // unpersisting an identical re-request would drop the new entry too
-    if (prev != null && !prev.queryExecution.analyzed
-          .sameResult(cached.queryExecution.analyzed))
-      prev.unpersist(blocking = false)
-    cached
-  }
-
-  /** One-slot cache for [[qualityKeeper]]'s component table (same
-    * lifecycle as the signature slot — at most one cached closure). */
-  private val lastKeeperComp = new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
-  private def cacheKeeperComp(df: DataFrame): DataFrame = {
-    val cached = df.cache()
-    val prev = lastKeeperComp.getAndSet(cached)
-    if (prev != null && !prev.queryExecution.analyzed
-          .sameResult(cached.queryExecution.analyzed))
-      prev.unpersist(blocking = false)
-    cached
-  }
-
-  /** Release the one-slot operator caches (MinHash signature table,
-    * [[qualityKeeper]]'s component table) — the PUBLIC eviction hook
-    * for long sessions: a keeper run over a crawl-scale component
-    * table otherwise stays pinned (one slot, memory-and-disk) until
-    * the next call replaces it. */
-  def releaseCaches(): Unit = resetCaches()
-
-  /** Bench/test hook: drop the one-slot signature + keeper-component
-    * caches so the next call measures a cold build (a warm slot made
-    * the second bench pass understate the operator's true cost). */
-  private[graft] def resetCaches(): Unit = {
-    val prev = lastSigned.getAndSet(null)
-    if (prev != null) prev.unpersist(blocking = false)
-    val prevK = lastKeeperComp.getAndSet(null)
-    if (prevK != null) prevK.unpersist(blocking = false)
-  }
-
-  /** Cross-module access to the one-slot signature cache
-    * ([[graft.operators.SimilaritySearch]]'s hyperplane table). */
-  private[operators] def cacheSignedShared(df: DataFrame): DataFrame =
-    cacheSigned(df)
-
   /** The signature stage alone, through the one-slot signature cache —
     * the seam the cache's replacement rule is tested through. */
   private[graft] def minHashSignedForProfile(
       df: DataFrame, textCol: String, idCol: String,
       numHashes: Int = 128, shingleSize: Int = 3, seed: Long = 42L): DataFrame =
-    cacheSigned(spread(df).select(col(idCol).as("id"),
+    graft.Memo.signatures.pin(spread(df).select(col(idCol).as("id"),
         minHashSignature(numHashes, shingleSize, seed)(col(textCol)).as("sig"))
       .filter(col("sig").isNotNull))
 
@@ -446,7 +392,7 @@ object Dedup {
     // rejoins — cache so the signature UDF runs once per row
     // (at cluster scale: persist the signature table); the one-slot
     // registry evicts the previous call's cache
-    val signed = cacheSigned(spread(df).select(
+    val signed = graft.Memo.signatures.pin(spread(df).select(
         col(idCol).as("id"),
         minHashSignature(numHashes, shingleSize, seed)(col(textCol)).as("sig"))
       .filter(col("sig").isNotNull))
@@ -850,7 +796,7 @@ object Dedup {
     * as the signature cache. */
   private def gatedCompSide(comp: DataFrame, maxBroadcastRows: Long): DataFrame = {
     require(maxBroadcastRows >= 0, "maxBroadcastRows must be >= 0")
-    val cached = cacheKeeperComp(comp)
+    val cached = graft.Memo.keeperComponents.pin(comp)
     val clustered = cached.count()
     if (clustered <= maxBroadcastRows) broadcast(cached)
     else cached.hint("shuffle_merge")

@@ -27,15 +27,11 @@ object ModelQueries {
   private val custColumns: Map[Int, String] =
     custVars.map(v => v.colno -> v.name).toMap
 
-  // fitted ensembles cached per scale-factor dir (fit = one agg over the
-  // base table; refitting per query would repeat the scan)
-  private val cache = scala.collection.concurrent.TrieMap.empty[String, PopulationModel]
-
-  /** Drop the fitted ensembles (determinism gate: refit fresh, same seed). */
-  private[graft] def resetForDeterminism(): Unit = cache.clear()
-
+  // fitted ensembles cached per scale-factor dir, with session lifetime
+  // (fit = one agg over the base table; refitting per query would repeat
+  // the scan)
   def customerModel(spark: SparkSession, sfDir: String): PopulationModel =
-    cache.getOrElseUpdate(sfDir, {
+    graft.Memo.ensembles.getOrElseUpdate(sfDir) {
       val df = Tables.load(spark, sfDir, "customer")
       val backend = Backends.byName("nig_normal")
       val rng = DetRng(SessionSeed, 0xf17L)
@@ -46,7 +42,7 @@ object ModelQueries {
         Population(1, "customer_pop", "customer", custVars),
         Seq(FittedGenerator("customer_nig", backend, analyzed)),
         SessionSeed)
-    })
+    }
 
   /** m01: ESTIMATE PREDICTIVE PROBABILITY OF c_acctbal GIVEN (c_nationkey)
     * FROM customer_pop — per-row UDF over the broadcast ensemble. */

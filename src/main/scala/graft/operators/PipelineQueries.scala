@@ -30,62 +30,13 @@ object PipelineQueries {
   // MinHash candidate pairs shared by p02/p04: the banding machinery is
   // identical for both, only the est_jaccard threshold differs — compute
   // once per dir at the loosest threshold and filter downstream
-  private val candsCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
-  /** Drop the per-dir operator caches plus the media fixture
-    * (unpersisting their pinned frames) so the determinism gate's second
-    * pass rebuilds each from the raw parquet under the same seed. */
-  private[graft] def resetForDeterminism(): Unit = {
-    resetOperatorCaches()
-    mediaCache.values.foreach(_.unpersist())
-    mediaCache.clear()
-  }
-
-  /** Stage-boundary caches (p38's curation chain, p86's crawl chain —
-    * see [[p38CrawlCuration]]/[[crawlChain]]). The result
-    * frame is lazy, so entries cannot be unpersisted inside the call;
-    * the registry holds each distinct stage plan once (the cache
-    * manager is keyed by analyzed plan, so a repeated p38 build on the
-    * same dir re-hits the SAME entries rather than accumulating) and
-    * the bench/determinism resets drop them all. */
-  private val p38Stages =
-    new java.util.concurrent.atomic.AtomicReference[List[DataFrame]](Nil)
-  private def p38Stage(df: DataFrame): DataFrame = {
-    val cached = df.cache()
-    p38Stages.updateAndGet { ls =>
-      if (ls.exists(_.queryExecution.analyzed
-            .sameResult(cached.queryExecution.analyzed))) ls
-      else cached :: ls
-    }
-    cached
-  }
-  private def resetP38Stages(): Unit =
-    p38Stages.getAndSet(Nil).foreach(_.unpersist(blocking = false))
-
-  /** Lineage-truncation registry (crawlChain's lazy localCheckpoints):
-    * the resets drop the references so the ContextCleaner reclaims the
-    * checkpointed blocks — nothing persists into the next bench pass,
-    * and the next pass re-materializes cold. */
-  private val checkpoints =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-  private def trackCheckpoint(df: DataFrame): DataFrame = {
-    checkpoints.add(df); df
-  }
-  private def resetCheckpoints(): Unit = checkpoints.clear()
-
-  /** Cross-module access to the stage-boundary cache registry (p92's
-    * scored frame in [[TextAnalysis.ccnetLangBuckets]] — computed once,
-    * read by the histogram collect and the three verdict branches). */
-  private[graft] def stageCache(df: DataFrame): DataFrame = p38Stage(df)
-
   private def minhashCandsFor(spark: SparkSession, dir: String): DataFrame =
-    candsCache.getOrElseUpdate(dir, {
+    graft.Memo.minhashCands.getOrElseUpdate(dir) {
       val c = Dedup.minHashCandidates(Tables.load(spark, dir, "documents"),
         "text", "doc_id", minEstJaccard = 0.1).cache()
       c.count()
       c
-    })
+    }
 
   /** p02: MinHash+LSH near-dup candidate pairs (rows-only: the candidate
     * set is algorithm-defined, pinned by PipelineSpec recall tests). */
@@ -235,15 +186,12 @@ object PipelineQueries {
 
   // IVF index fitted once per scale-factor dir (k-means is the build
   // cost; queries only probe cells)
-  private val ivfCache =
-    scala.collection.concurrent.TrieMap.empty[String, SimilaritySearch.IvfIndex]
-
   def ivfIndexFor(spark: org.apache.spark.sql.SparkSession, dir: String): SimilaritySearch.IvfIndex =
-    ivfCache.getOrElseUpdate(dir, {
+    graft.Memo.ivfIndexes.getOrElseUpdate(dir) {
       val idx = SimilaritySearch.ivfIndex(
         Tables.load(spark, dir, "embeddings"), "embedding", "vec_id")
       idx.copy(cells = idx.cells.cache())
-      })
+    }
 
   /** p07: IVF pruned ANN — k-means coarse quantizer (MLlib k-means||),
     * probe the nearest cells only (rows-only; recall vs p06 brute force
@@ -1418,15 +1366,11 @@ object PipelineQueries {
   private val P54Merges = 32
 
   // train once per dir: p54 (two keys), p56, and p59 all consume the
-  // same P54Merges model — without this cache the suite retrained the
-  // identical vocabulary four times per pass (the candsCache
-  // discipline applied to model state). Cleared by BOTH reset hooks:
-  // the det gate must refit from raw parquet, and the bench's second
-  // pass measures cold training (it IS p54's measured work).
-  private val bpeCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Int), TextAnalysis.BpeModel]
+  // same P54Merges model — without the memo the suite retrained the
+  // identical vocabulary four times per pass. Pass lifetime: training
+  // IS p54's measured work, so every bench pass trains cold.
   private def bpeModelFor(spark: SparkSession, dir: String): TextAnalysis.BpeModel =
-    bpeCache.getOrElseUpdate((dir, P54Merges),
+    graft.Memo.bpeModels.getOrElseUpdate((dir, P54Merges))(
       TextAnalysis.bpeTrain(Tables.load(spark, dir, "documents"), "text", P54Merges))
 
   /** p54: BPE vocabulary TRAINING over the documents corpus
@@ -2419,31 +2363,23 @@ object PipelineQueries {
 
   /** The p86 chain body over any landing dir — `fileKey` derives the
     * numeric record-key prefix from the warc file name (the oracle key
-    * uses the fixture's literal five-name map; the 100× probe hashes
-    * arbitrary replicated names). */
+    * uses the fixture's literal five-name map). */
   private[graft] def crawlChain(spark: SparkSession, warcDir: String,
-      fileKey: org.apache.spark.sql.Column,
-      truncateLineage: Boolean = true): DataFrame = {
-    // stage-boundary caches (the p38 registry): the parsed-response and
-    // post-filter frames feed several report branches each — without a
-    // cache the lineage recomputes the WARC parse + filter kernels once
-    // per branch (6x the head at 100x).
+      fileKey: org.apache.spark.sql.Column): DataFrame = {
+    // stage boundaries: the parsed-response and post-filter frames feed
+    // several report branches each — without a boundary the lineage
+    // recomputes the WARC parse + filter kernels once per branch.
     //
-    // r19 (guide §3.3/§5, VERDICT #4): the boundaries additionally
-    // TRUNCATE LINEAGE (lazy localCheckpoint) — the composed chain's
-    // ~37 actions (broadcast builds, dedup/split cardinality gates, the
-    // report) each re-analyzed the full WARC-parse lineage, leaving
-    // p86's warm wall ~2.0 s with only 0.6 s inside jobs; against a
-    // LogicalRDD leaf the per-action planning collapses. Same
-    // materialize-once semantics as the cache; rows are unchanged. The
-    // 100×-probe path passes truncateLineage=false — at corpus scale an
-    // in-memory checkpoint is the wrong trade (a real ingest writes
-    // intermediate parquet between stages, which is what the cache
-    // stands in for locally), and the probe must exercise the full
-    // lineage the cluster plan would carry.
-    def stage(df: DataFrame): DataFrame =
-      if (truncateLineage) trackCheckpoint(df.localCheckpoint(false))
-      else p38Stage(df)
+    // r19 (guide §3.3/§5, VERDICT #4): the boundaries TRUNCATE LINEAGE
+    // (lazy localCheckpoint) — the composed chain's ~37 actions
+    // (broadcast builds, dedup/split cardinality gates, the report) each
+    // re-analyzed the full WARC-parse lineage under a plain cache(),
+    // leaving p86's warm wall ~2.0 s with only 0.6 s inside jobs; against
+    // a LogicalRDD leaf the per-action planning collapses. Same
+    // materialize-once semantics as a cache; rows are unchanged. Each
+    // checkpoint stays reachable from the frames built on it for as long
+    // as the caller holds the result, and no longer.
+    def stage(df: DataFrame): DataFrame = df.localCheckpoint(false)
     val responses = stage(graft.sources.Warc
       .readAudited(spark, warcDir, "*.warc.gz")
       .filter(col("ok") && col("warc_type") === "response" &&
@@ -4162,20 +4098,19 @@ object PipelineQueries {
     // localCheckpoint has the same MEMORY_AND_DISK footprint as the
     // cache it replaces, so the 100× probe regime is unchanged; the
     // boundary is the local analogue of the intermediate parquet
-    // checkpoint a cluster-scale ingest writes between curation stages;
-    // Bench/determinism resets drop the refs so every pass is cold.
+    // checkpoint a cluster-scale ingest writes between curation stages.
     // spreadHeavy: the single-row-group test file gives the scan one
     // task, which would serialize the htmlToText extraction on one core;
     // at cluster scale the scan splits naturally and spread is a no-op.
     // Heavy class — extraction is ~2.4 s of single-core work per 600 KB
     // (A/B at 32 cores: 2.15 s spread vs 2.37 s unspread).
-    val ex = trackCheckpoint(Dedup.spreadHeavy(docs).select(col("doc_id"),
+    val ex = Dedup.spreadHeavy(docs).select(col("doc_id"),
       TextAnalysis.htmlToText(p35FixtureHtml).as("extracted"))
-      .localCheckpoint(false))
+      .localCheckpoint(false)
     val gate = TextAnalysis.lengthQuantileFilter(ex, "extracted", "doc_id", 10, 90)
-    val surv = trackCheckpoint(ex.join(
+    val surv = ex.join(
       gate.filter(col("kept")).select(col("doc_id"), col("n_tokens")),
-      Seq("doc_id")).localCheckpoint(false))
+      Seq("doc_id")).localCheckpoint(false)
     val lm = TextAnalysis.bigramLmScoreKernel(surv, "extracted", "doc_id",
         refCond = pmod(col("doc_id"), lit(5)) === 0, k = 1.0)
       .withColumn("bucket",
@@ -4183,10 +4118,10 @@ object PipelineQueries {
           .when(col("lm_logprob") >= -3.55, lit("head"))
           .when(col("lm_logprob") >= -3.85, lit("middle"))
           .otherwise(lit("tail")))
-    val fin = trackCheckpoint(surv.join(
+    val fin = surv.join(
       lm.filter(col("bucket").isin("head", "middle"))
         .select(col("doc_id"), col("lm_logprob"), col("bucket")),
-      Seq("doc_id")).localCheckpoint(false))
+      Seq("doc_id")).localCheckpoint(false)
     val span = Dedup.spanDupStats(fin, "extracted", "doc_id", width = 8)
     fin.select(col("doc_id"), col("n_tokens"), col("lm_logprob"), col("bucket"))
       .join(span, Seq("doc_id"))
@@ -4713,12 +4648,10 @@ object PipelineQueries {
       |ORDER BY doc_id""".stripMargin
 
   // synthetic PNG payloads fabricated once per dir — the p12/p13 queries
-  // measure the decode/sample operators, not test-data encoding
-  private val mediaCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
+  // measure the decode/sample operators, not test-data encoding, so the
+  // fixture has session lifetime
   private def mediaFor(spark: SparkSession, dir: String): DataFrame =
-    mediaCache.getOrElseUpdate(dir, {
+    graft.Memo.media.getOrElseUpdate(dir) {
       // bounded media fixture: real payloads scale with the corpus; the
       // fabricated PNGs cap at 5k so fixture encoding stays a fixture.
       // Repartition first — the docs parquet is a single file/partition
@@ -4728,31 +4661,11 @@ object PipelineQueries {
       val m = Multimodal.syntheticMedia(docs).cache()
       m.count()
       m
-    })
+    }
 
   /** Prime the synthetic-media fixture (PNG fabrication is test-data
     * encoding, not the decode/sample operators p12/p13 measure). */
   def warmMedia(spark: SparkSession, dir: String): Unit = { mediaFor(spark, dir); () }
-
-  /** Bench hook: drop the per-dir operator-algorithm caches (MinHash
-    * candidates, IVF index, one-slot signature table) so a second bench
-    * pass measures COLD algorithm cost — the caches are the measured
-    * work, and a warm second pass both understated the recorded min and
-    * tripped the >3x suspect flag every round. The media fixture stays:
-    * it is shared setup, not measured work. */
-  def resetOperatorCaches(): Unit = {
-    candsCache.values.foreach(_.unpersist(blocking = false))
-    candsCache.clear()
-    ivfCache.values.foreach(_.cells.unpersist(blocking = false))
-    ivfCache.clear()
-    bpeCache.clear()
-    kmeansCache.clear()
-    Dedup.resetCaches()
-    Relational.resetSkewStatCache()
-    TextAnalysis.resetLmModelCache()
-    resetP38Stages()
-    resetCheckpoints()
-  }
 
   /** p12: multimodal decode/features — REAL PNG decode via javax.imageio
     * over binary payloads (row-local; bytes never shuffle). */
@@ -5194,17 +5107,17 @@ object PipelineQueries {
     * halves of the banding tuning report share one production candidate
     * run (both audits accept a materialized-candidate input for exactly
     * this reason; regenerating the corpus-wide LSH per half doubled the
-    * suite's audit cost). Memoized like [[minhashCandsFor]]; the bench/
-    * determinism resets drop it. */
+    * suite's audit cost). Memoized like [[minhashCandsFor]], in the same
+    * pass-lifetime slot. */
   private def p89CandsFor(spark: SparkSession, dir: String): DataFrame =
-    candsCache.getOrElseUpdate(dir + "#p89", {
+    graft.Memo.minhashCands.getOrElseUpdate(dir + "#p89") {
       val aug = Tables.load(spark, dir, "documents")
         .select(col("doc_id"), p89FixtureText.as("t"))
       val c = Dedup.minHashCandidates(aug, "t", "doc_id", minEstJaccard = 0.2)
         .cache()
       c.count()
       c
-    })
+    }
 
   // lazy: defined after the queries map in object-init order
   lazy val p89LshRecall: Q = (spark, dir) => {
@@ -5406,9 +5319,9 @@ object PipelineQueries {
       .filter(col("v").isNotNull && size(col("v")) > 0)
     // stage-cached: the assignment frame feeds 4 queries × (1 brute +
     // 4 probe) top-k jobs — uncached, every one of those 20 jobs
-    // re-evaluated NearestCentroid over the corpus; the bench/
-    // determinism resets drop the cache
-    val cells = stageCache(data.withColumn("cell",
+    // re-evaluated NearestCentroid over the corpus; the stage slot has
+    // pass lifetime
+    val cells = graft.Memo.stages.pin(data.withColumn("cell",
         graft.functions.NearestCentroid(col("v"), cents.map(_.toSeq).toSeq))
       .filter(col("cell").isNotNull))
     val queries = data.orderBy(Sampling.hash63(col("id"), 97L), col("id"))
@@ -5424,8 +5337,8 @@ object PipelineQueries {
     val k = 10
     val out = queries.toSeq.flatMap { case (qid, qv) =>
       // per-query cosine computed once, read by the brute + 4 probe
-      // top-k jobs (same registry/reset lifecycle as `cells`)
-      val scored = stageCache(cells.select(col("id"), col("cell"),
+      // top-k jobs (same pass-lifetime slot as `cells`)
+      val scored = graft.Memo.stages.pin(cells.select(col("id"), col("cell"),
           SimilaritySearch.cosine(col("v"), typedLit(qv.toSeq)).as("cs"))
         .filter(col("cs").isNotNull))
       val brute = scored.orderBy(col("cs").desc, col("id")).limit(k)
@@ -5839,12 +5752,9 @@ object PipelineQueries {
     * whole-stage codegen + one map-side-combined count. Nothing
     * shuffles vectors. */
   // fitted once per scale-factor dir (driver-array model state, shared
-  // by p91/p95/st29 — the ivfCache discipline; cleared by both resets)
-  private val kmeansCache =
-    scala.collection.concurrent.TrieMap.empty[String, SimilaritySearch.KmeansFit]
-
+  // by p91/p95/st29; pass lifetime, like the IVF index)
   private[graft] def kmeansFitFor(spark: SparkSession, dir: String): SimilaritySearch.KmeansFit =
-    kmeansCache.getOrElseUpdate(dir,
+    graft.Memo.kmeansFits.getOrElseUpdate(dir)(
       SimilaritySearch.kmeansFit(Tables.load(spark, dir, "embeddings"),
         "embedding", "vec_id",
         k = P91K, iters = P91Iters, sampleCap = P91Cap, seed = P91Seed))

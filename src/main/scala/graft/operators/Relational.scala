@@ -412,12 +412,8 @@ object Relational {
   // inputFiles list, which would degrade the guard to plan-hash-only —
   // those are NOT cached at all: the plan hash cannot see a mutated
   // in-memory input, and a localRelation probe is cheap anyway.
-  // Bounded (single-entry eviction — one hot caller must not evict the
-  // whole working set), and wired into the determinism reset.
-  private val skewProbeCache =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), Long]
-
-  private[graft] def resetSkewStatCache(): Unit = skewProbeCache.clear()
+  // Bounded at 64 entries (graft.Memo.skewProbes, pass lifetime): a miss
+  // on a full slot evicts one other entry, never the requested key.
 
   def sessionize(events: DataFrame,
       gapUs: Long = 1800L * 1000000L,
@@ -433,15 +429,7 @@ object Relational {
       if (files.isEmpty) probe() // non-file source: uncacheable (see above)
       else {
         val key = (events.queryExecution.analyzed.semanticHash(), files)
-        // lookup first; evict only on a miss and never the requested
-        // key — evict-before-lookup could thrash the hot caller's own
-        // entry, re-running the corpus scan this cache exists to avoid
-        skewProbeCache.get(key).getOrElse {
-          while (skewProbeCache.size >= 64 &&
-              skewProbeCache.keys.find(_ != key).exists(k =>
-                skewProbeCache.remove(k).isDefined)) {}
-          skewProbeCache.getOrElseUpdate(key, probe())
-        }
+        graft.Memo.skewProbes.getOrElseUpdate(key)(probe())
       }
     }
     if (maxUserRows <= maxEntityRowsPerTask) sessionizeSinglePass(events, gapUs)

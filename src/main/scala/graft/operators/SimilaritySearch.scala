@@ -156,8 +156,8 @@ object SimilaritySearch {
     // one cached signature table (r19, §2.4): the bucket pass reads it
     // once and each vector rejoin re-evaluates its sig-isNotNull filter —
     // uncached, the HyperplaneSignatures kernel ran 3× per corpus pass
-    // (the Dedup one-slot lifecycle; bench/determinism resets drop it)
-    val signed = Dedup.cacheSignedShared(Dedup.spread(df)
+    // (one slot, pass lifetime)
+    val signed = graft.Memo.signatures.pin(Dedup.spread(df)
       .select(col(idCol).as("id"), asDoubles(col(vecCol)).as("v"),
         graft.functions.HyperplaneSignatures(col(vecCol), seed, bits).as("sig"))
       .filter(col("sig").isNotNull))

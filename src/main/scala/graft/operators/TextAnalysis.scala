@@ -1128,28 +1128,13 @@ object TextAnalysis {
     // key — two extra collect jobs per pass at the driver's 32-core
     // config. The key is the ANALYZED plan of the slice the fit reads
     // (sameResult — the CacheManager's own equivalence), so a different
-    // corpus, text column, or refCond fits fresh; the registry drops on
-    // the bench/determinism resets so every measured pass is cold.
+    // corpus, text column, or refCond fits fresh; the memo has pass
+    // lifetime so every measured pass is cold.
     val keyPlan = docs.filter(refCond).select(col(textCol))
       .queryExecution.analyzed
-    lmModelCache.get().collectFirst {
-      case ((p, kk, me), m) if kk == k && me == maxEntries &&
-        p.sameResult(keyPlan) => m
-    } match {
-      case Some(m) => m
-      case None =>
-        val fitted = lmModelFit(docs, textCol, refCond, k, maxEntries)
-        lmModelCache.updateAndGet(((keyPlan, k, maxEntries), fitted) :: _)
-        fitted
-    }
+    graft.Memo.lmModels.getOrElseUpdate(keyPlan, (k, maxEntries))(
+      lmModelFit(docs, textCol, refCond, k, maxEntries))
   }
-
-  private val lmModelCache = new java.util.concurrent.atomic.AtomicReference[
-    List[((org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Double, Int),
-      graft.functions.LmModel)]](Nil)
-
-  /** Drop the fitted-model memo (bench pass / determinism resets). */
-  private[graft] def resetLmModelCache(): Unit = lmModelCache.set(Nil)
 
   private def lmModelFit(docs: DataFrame, textCol: String, refCond: Column,
       k: Double, maxEntries: Int): graft.functions.LmModel = {
@@ -1233,8 +1218,8 @@ object TextAnalysis {
     val m = model.getOrElse(lmModelFor(docs, textCol, refCond, k))
     // stage-cached: the scored frame feeds the histogram collect AND
     // the three verdict branches — uncached it would recompute ~4x;
-    // the registry unpersists on the bench/determinism resets
-    val base = PipelineQueries.stageCache(
+    // the pass-lifetime stage slot unpersists it
+    val base = graft.Memo.stages.pin(
       Dedup.spread(docs)
         .select(col(idCol), languageId(col(textCol)).as("pred_lang"),
           graft.functions.LmDocScore(col(textCol), m).as("__s"))

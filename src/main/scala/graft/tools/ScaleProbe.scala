@@ -212,25 +212,17 @@ object ScaleProbe {
       build(spark, srcDir, outDir, factor, missing)
     } else println(s"[scale] reusing $outDir")
 
-    // SPARK_GRAFT_PROBE_FORCE=1: evaluate every output column (hash and
-    // reduce) instead of count() — for keys whose expensive kernel is a
-    // PROJECTION the optimizer prunes under count (p25's PiiScan: the
-    // row count doesn't depend on it, so count() times the bare scan).
-    // Join/aggregate/explode-shaped keys are count-safe; the default
-    // stays count() for cross-round comparability.
-    val force = sys.env.get("SPARK_GRAFT_PROBE_FORCE").contains("1")
+    // times what a caller gets: every output column is hashed and
+    // reduced, so the optimizer cannot prune a projection kernel the row
+    // count does not depend on (count() timed p25's PiiScan as a bare
+    // scan). The max over the row hash cannot overflow (ANSI mode is on;
+    // the value is discarded).
     def timeOne(key: String, dir: String): (Double, Long) = {
-      graft.operators.PipelineQueries.resetOperatorCaches()
+      graft.Memo.resetPass()
       val t0 = System.nanoTime()
       val df = graft.SparkEntry.queries(key)(spark, dir)
-      val n =
-        if (force) {
-          // max over the row hash cannot be pruned and cannot overflow
-          // (ANSI mode is on; the value is discarded)
-          val r = df.select(xxhash64(df.columns.map(col): _*).as("h"))
-            .agg(count(lit(1)), max(col("h"))).head()
-          r.getLong(0)
-        } else df.count()
+      val n = df.select(xxhash64(df.columns.map(col): _*).as("h"))
+        .agg(count(lit(1)), max(col("h"))).head().getLong(0)
       ((System.nanoTime() - t0) / 1e9, n)
     }
     // warmup

@@ -37,6 +37,17 @@ class BqlExecSpec extends AnyFunSuite {
 
   private def one(sql: String): Any = rows(sql).head.head
 
+  test("two engines on one session register the math UDFs once") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val registry = spark.sessionState.functionRegistry
+    def erf = registry.lookupFunctionBuilder(FunctionIdentifier("erf"))
+    new BayesDB(spark, seed = 1L)
+    val before = erf
+    assert(before.isDefined)
+    new BayesDB(spark, seed = 2L)
+    assert(erf.get eq before.get, "the second engine re-registered erf")
+  }
+
   // ------------------------------------------------------------- SELECT
 
   test("select literals and arithmetic without FROM") {

@@ -65,8 +65,7 @@ class DeterminismSpec extends AnyFunSuite {
     // fit path would surface here)
     val first = Verify.canonicalHash(
       operators.ModelQueries.queries("m02_simulate")(spark, sf))
-    operators.ModelQueries.resetForDeterminism()
-    operators.BqlQueries.resetForDeterminism()
+    Memo.resetAll()
     val second = Verify.canonicalHash(
       operators.ModelQueries.queries("m02_simulate")(spark, sf))
     assert(first == second, "refit under the same seed changed SIMULATE output")

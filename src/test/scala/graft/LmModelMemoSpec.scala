@@ -8,13 +8,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * reference-slice model, and r18 refit it (collect jobs) in every key.
   * The memo keys on the analyzed plan of the slice the fit reads, so
   * equal slices share one fit, different slices (corpus, refCond, k)
-  * fit fresh, and the bench/determinism resets drop the memo so every
-  * measured pass is cold. */
+  * fit fresh, and the memo has pass lifetime so every measured pass is
+  * cold. */
 class LmModelMemoSpec extends AnyFunSuite {
   import TestSpark._
 
   test("lmModelFor memoizes per (slice plan, k) and resets cold") {
-    TextAnalysis.resetLmModelCache()
+    Memo.resetPass()
     val docs = Tables.load(spark, sf, "documents")
     val cond = pmod(col("doc_id"), lit(5)) === 0
     val m1 = TextAnalysis.lmModelFor(docs, "text", cond)
@@ -31,10 +31,10 @@ class LmModelMemoSpec extends AnyFunSuite {
     assert(!(m4 eq m1))
     // reset (the bench pass-2 / determinism lifecycle) drops the memo,
     // and the refit is value-identical to the first fit
-    TextAnalysis.resetLmModelCache()
+    Memo.resetPass()
     val m5 = TextAnalysis.lmModelFor(docs, "text", cond)
     assert(!(m5 eq m1))
     assert(m5 == m1)
-    TextAnalysis.resetLmModelCache()
+    Memo.resetPass()
   }
 }
