@@ -107,10 +107,4 @@ object Tables {
         cached
       } finally sorted.unpersist(blocking = false)
     }
-
-  /** Register all tables of a scale-factor dir as temp views. */
-  def registerAll(spark: SparkSession, sfDir: String): Unit =
-    names.foreach { n =>
-      load(spark, sfDir, n).createOrReplaceTempView(n)
-    }
 }

@@ -243,16 +243,50 @@ object Ast {
   }
 
   /** Does this expression (recursively) contain a BQL estimator? */
-  def containsBql(e: Exp): Boolean = isBql(e) || (e match {
-    case ExpOp(_, os) => os.exists(containsBql)
-    case ExpApp(_, _, os) => os.exists(containsBql)
+  def containsBql(e: Exp): Boolean = exists(e)(isBql)
+
+  // ------------------------------------------------------ tree structure
+
+  /** The direct sub-expressions of `e`, in field order (CASE: key, each
+    * WHEN/THEN pair, ELSE; IN: the left side, then the list). Subquery
+    * bodies are not children (an IN-subquery contributes only its left
+    * side), and BQL estimator nodes are leaves: the estimator compiler
+    * evaluates their operands, not the row-expression compiler. */
+  def children(e: Exp): Seq[Exp] = e match {
+    case ExpOp(_, os) => os
+    case ExpApp(_, _, os) => os
+    case ExpCase(k, ws, o) => k.toSeq ++ ws.flatMap(w => Seq(w._1, w._2)) ++ o.toSeq
+    case ExpCast(x, _) => Seq(x)
+    case ExpCollate(x, _) => Seq(x)
+    case ExpInExp(x, _, es) => x +: es
+    case ExpInQuery(x, _, _) => Seq(x)
+    case _ => Nil
+  }
+
+  /** `e` with `f` applied to each of its [[children]], in the same order;
+    * a leaf comes back as it is. */
+  def mapChildren(e: Exp)(f: Exp => Exp): Exp = e match {
+    case ExpOp(op, os) => ExpOp(op, os.map(f))
+    case ExpApp(d, fn, os) => ExpApp(d, fn, os.map(f))
     case ExpCase(k, ws, o) =>
-      k.exists(containsBql) || ws.exists(w => containsBql(w._1) || containsBql(w._2)) ||
-        o.exists(containsBql)
-    case ExpCast(x, _) => containsBql(x)
-    case ExpCollate(x, _) => containsBql(x)
-    case ExpInExp(x, _, es) => containsBql(x) || es.exists(containsBql)
-    case ExpInQuery(x, _, _) => containsBql(x)
-    case _ => false
-  })
+      ExpCase(k.map(f), ws.map { case (a, b) => (f(a), f(b)) }, o.map(f))
+    case ExpCast(x, t) => ExpCast(f(x), t)
+    case ExpCollate(x, c) => ExpCollate(f(x), c)
+    case ExpInExp(x, p, es) => ExpInExp(f(x), p, es.map(f))
+    case ExpInQuery(x, p, q) => ExpInQuery(f(x), p, q)
+    case leaf => leaf
+  }
+
+  /** Whether `p` holds at `e` or at any node below it through
+    * [[children]] (so not inside subquery bodies). */
+  def exists(e: Exp)(p: Exp => Boolean): Boolean =
+    p(e) || children(e).exists(exists(_)(p))
+
+  /** The body of a nested subquery node (scalar, EXISTS or IN). */
+  def subqueryOf(e: Exp): Option[Query] = e match {
+    case ExpSub(q) => Some(q)
+    case ExpExists(q) => Some(q)
+    case ExpInQuery(_, _, q) => Some(q)
+    case _ => None
+  }
 }

@@ -31,6 +31,15 @@ import Ast._
   *    one join; non-aggregate scalars, EXISTS and IN plan as native
   *    Catalyst subquery expressions. Shapes with no well-defined
   *    decorrelation are rejected with a named D3 error.
+  *
+  * The decorrelators stay hand-written rather than defer to Catalyst's
+  * own, which drops the equality on mixed equality+theta correlation
+  * (b26); the measurement is ROADMAP item 8.
+  *
+  * Expression walkers fold over `Ast.children` / `Ast.mapChildren` and
+  * spell out only the nodes they treat specially. `compile` and the
+  * whitelists `embedSafe`, `qualify` and `aliasesOf` stay explicit: they
+  * reject the shapes they do not list.
   */
 object Planner {
 
@@ -76,6 +85,12 @@ object Planner {
     * plus alias → columns, used to classify a subquery's column references
     * as inner or outer (correlated). */
   final case class Scope(names: Set[String], tables: Map[String, Set[String]])
+  object Scope {
+    /** The scope of FROM terms given as (alias, column names). */
+    def of(frames: Seq[(String, Seq[String])]): Scope = Scope(
+      frames.flatMap(_._2).map(Names.casefold).toSet,
+      frames.map { case (a, cs) => Names.casefold(a) -> cs.map(Names.casefold).toSet }.toMap)
+  }
 
   /** `scope` is this query's own FROM-frame; `outerScope` is the enclosing
     * frame when this query is a subquery — references that do not resolve
@@ -224,30 +239,35 @@ object Planner {
 
   private def planSelect(bdb: BayesDB, s: Select, binds: Seq[Any],
       outer: Option[Scope] = None): DataFrame = {
-    val tabs: Seq[(String, DataFrame)] = s.tables.map { st =>
-      val df = st.table match {
-        case Right(name) => bdb.table(name)
-        case Left(sub) => plan(bdb, sub, binds)
-      }
-      val alias = st.name.getOrElse(st.table match {
-        case Right(name) => name
-        case Left(_) => "__sub__"
-      })
-      (alias, df)
-    }
-    val base =
-      if (tabs.isEmpty) oneRow(bdb)
-      else tabs.map { case (a, df) => df.as(a) }.reduceLeft(_ crossJoin _)
-    val scope = Scope(
-      tabs.flatMap(_._2.columns).map(Names.casefold).toSet,
-      tabs.map { case (a, df) =>
-        Names.casefold(a) -> df.columns.map(Names.casefold).toSet }.toMap)
+    val tabs = fromFrames(bdb, s.tables, binds)
+    val base = if (tabs.isEmpty) oneRow(bdb) else crossJoinFrames(tabs)
+    val scope = Scope.of(tabs.map { case (a, df) => (a, df.columns.toSeq) })
     val ctx = Ctx(bdb, NoModelCtx, binds, agg = false,
       scope = Some(scope), outerScope = outer)
     assemble(base, Nil, s.columns, s.quantifier, s.condition, s.grouping,
       s.order, s.limit, ctx,
       starColumns = starCols(s.tables, bdb, binds))
   }
+
+  /** The name a FROM term is known by: its alias, else its table name. */
+  private def aliasOf(st: SelTab): String = st.name.getOrElse(st.table match {
+    case Right(name) => name
+    case Left(_) => "__sub__"
+  })
+
+  /** Each FROM term planned (a table, or a FROM-subquery) under its alias. */
+  private def fromFrames(bdb: BayesDB, tables: Seq[SelTab],
+      binds: Seq[Any]): Seq[(String, DataFrame)] =
+    tables.map { st =>
+      (aliasOf(st), st.table match {
+        case Right(name) => bdb.table(name)
+        case Left(sub) => plan(bdb, sub, binds)
+      })
+    }
+
+  /** The cross join of FROM frames, each aliased so qualified refs resolve. */
+  private def crossJoinFrames(tabs: Seq[(String, DataFrame)]): DataFrame =
+    tabs.map { case (a, df) => df.as(a) }.reduceLeft(_ crossJoin _)
 
   /** Column names `*` expands to: all FROM-table columns minus the
     * materialized rowid (SQLite's implicit _rowid_ is likewise hidden
@@ -311,24 +331,11 @@ object Planner {
     * (tests/test_correlation.py), so planners for column contexts relax
     * the generator requirement when nothing else needs models. Subqueries
     * plan against their own population context and are not scanned. */
-  private def needsModels(exps: Seq[Exp]): Boolean = {
-    def scan(e: Exp): Boolean = e match {
+  private def needsModels(exps: Seq[Exp]): Boolean =
+    exps.exists(Ast.exists(_) {
       case _: ExpBQLCorrel | _: ExpBQLCorrelPval => false
-      case _: ExpBQLPredProb | _: ExpBQLProbDensity | _: ExpBQLProbDensityFn |
-           _: ExpBQLSim | _: ExpBQLPredRel | _: ExpBQLDepProb |
-           _: ExpBQLMutInf | _: ExpBQLPredict | _: ExpBQLPredictConf |
-           _: ExpBQLProbEst => true
-      case ExpOp(_, os) => os.exists(scan)
-      case ExpApp(_, _, as_) => as_.exists(scan)
-      case ExpCase(k, ws, o) =>
-        k.exists(scan) || ws.exists(w => scan(w._1) || scan(w._2)) || o.exists(scan)
-      case ExpCast(x, _) => scan(x)
-      case ExpCollate(x, _) => scan(x)
-      case ExpInExp(x, _, es) => (x +: es).exists(scan)
-      case _ => false
-    }
-    exps.exists(scan)
-  }
+      case e => isBql(e)
+    })
 
   private def planEstCols(bdb: BayesDB, e: EstCols, binds: Seq[Any]): DataFrame = {
     val exps = e.columns.collect { case SelColExp(x, _) => x } ++
@@ -682,14 +689,7 @@ object Planner {
           ExpInQuery(ExpCol(None, xn), p,
             requalifyDeep(ctx0, flattenCorrelatedFrom(ctx0, q)))
         })
-      case ExpOp(op, os) => ExpOp(op, os.map(rewrite))
-      case ExpApp(d, f, as_) => ExpApp(d, f, as_.map(rewrite))
-      case ExpCase(k, ws, o) => ExpCase(k.map(rewrite),
-        ws.map { case (a, b) => (rewrite(a), rewrite(b)) }, o.map(rewrite))
-      case ExpCast(x, t) => ExpCast(rewrite(x), t)
-      case ExpCollate(x, cl) => ExpCollate(rewrite(x), cl)
-      case ExpInExp(x, p, es) => ExpInExp(rewrite(x), p, es.map(rewrite))
-      case other => other
+      case other => mapChildren(other)(rewrite)
     }
 
     /** Qualify an outer-text expression so it can embed INSIDE a
@@ -723,19 +723,8 @@ object Planner {
   }
 
   /** Whether the expression contains any nested subquery. */
-  private def hasNestedQuery(e: Exp): Boolean = e match {
-    case ExpSub(_) | ExpExists(_) | ExpInQuery(_, _, _) => true
-    case ExpOp(_, os) => os.exists(hasNestedQuery)
-    case ExpApp(_, _, as_) => as_.exists(hasNestedQuery)
-    case ExpCase(k, ws, o) =>
-      k.exists(hasNestedQuery) ||
-        ws.exists(w => hasNestedQuery(w._1) || hasNestedQuery(w._2)) ||
-        o.exists(hasNestedQuery)
-    case ExpCast(x, _) => hasNestedQuery(x)
-    case ExpCollate(x, _) => hasNestedQuery(x)
-    case ExpInExp(x, _, es) => (x +: es).exists(hasNestedQuery)
-    case _ => false
-  }
+  private def hasNestedQuery(e: Exp): Boolean =
+    Ast.exists(e)(subqueryOf(_).isDefined)
 
   /** `isCorrelated` extended through nested subquery bodies: a subquery
     * whose ONLY reference to the enclosing frame sits at depth ≥ 2 still
@@ -1039,7 +1028,7 @@ object Planner {
     * (driver-side only; they are planned again when the query runs —
     * Catalyst analysis cost, not data cost). */
   private def queryScope(bdb: BayesDB, s: Select, binds: Seq[Any]): Scope = {
-    val tabs = s.tables.map { st =>
+    Scope.of(s.tables.map { st =>
       val cols = st.table match {
         case Right(name) => bdb.table(name).columns.toSeq
         case Left(sub) =>
@@ -1059,15 +1048,8 @@ object Planner {
               structuralColumns(bdb, sub, binds)
           }
       }
-      val alias = st.name.getOrElse(st.table match {
-        case Right(n) => n
-        case Left(_) => "__sub__"
-      })
-      (alias, cols)
-    }
-    Scope(tabs.flatMap(_._2).map(Names.casefold).toSet,
-      tabs.map { case (a, cs) =>
-        Names.casefold(a) -> cs.map(Names.casefold).toSet }.toMap)
+      (aliasOf(st), cols)
+    })
   }
 
   /** Output column names of a Select derived WITHOUT planning it (for
@@ -1094,24 +1076,21 @@ object Planner {
     * `outer` — the correlation witnesses. Nested subqueries analyze
     * themselves (one level of correlation; deeper nesting stays D3). */
   private def freeColRefs(e: Exp, inner: Scope, outer: Scope): Seq[ExpCol] = e match {
-    case c @ ExpCol(None, name) =>
+    case c @ ExpCol(t, n) => if (isOuterRef(t, n, inner, outer)) Seq(c) else Nil
+    case _ => children(e).flatMap(freeColRefs(_, inner, outer))
+  }
+
+  /** Whether a column ref escapes `inner` and resolves in `outer`: an
+    * unqualified name missing from `inner`, or a qualifier `inner` does
+    * not know (inner-first scoping, as SQLite). */
+  private def isOuterRef(table: Option[String], name: String, inner: Scope,
+      outer: Scope): Boolean = table match {
+    case None =>
       val cf = normRef(name)
-      if (!inner.names(cf) && outer.names(cf)) Seq(c) else Nil
-    case c @ ExpCol(Some(t), name) =>
+      !inner.names(cf) && outer.names(cf)
+    case Some(t) =>
       val tf = Names.casefold(t)
-      if (!inner.tables.contains(tf) &&
-        outer.tables.get(tf).exists(_(normRef(name)))) Seq(c) else Nil
-    case ExpSub(_) | ExpExists(_) => Nil
-    case ExpInQuery(x, _, _) => freeColRefs(x, inner, outer)
-    case ExpInExp(x, _, es) => (x +: es).flatMap(freeColRefs(_, inner, outer))
-    case ExpOp(_, os) => os.flatMap(freeColRefs(_, inner, outer))
-    case ExpApp(_, _, args) => args.flatMap(freeColRefs(_, inner, outer))
-    case ExpCase(k, ws, o) =>
-      (k.toSeq ++ ws.flatMap(w => Seq(w._1, w._2)) ++ o.toSeq)
-        .flatMap(freeColRefs(_, inner, outer))
-    case ExpCast(x, _) => freeColRefs(x, inner, outer)
-    case ExpCollate(x, _) => freeColRefs(x, inner, outer)
-    case _ => Nil
+      !inner.tables.contains(tf) && outer.tables.get(tf).exists(_(normRef(name)))
   }
 
   /** All expressions of a Select reachable for correlation analysis. */
@@ -1120,6 +1099,16 @@ object Planner {
       s.condition.toSeq ++
       s.grouping.toSeq.flatMap(g => g.keys ++ g.condition.toSeq) ++
       s.order.map(_.expression)
+
+  /** `s` with `f` applied to each of its [[selectExps]], in that order. */
+  private def mapSelectExps(s: Select)(f: Exp => Exp): Select = s.copy(
+    columns = s.columns.map {
+      case SelColExp(e, nm) => SelColExp(f(e), nm)
+      case other => other
+    },
+    condition = s.condition.map(f),
+    grouping = s.grouping.map(g => Grouping(g.keys.map(f), g.condition.map(f))),
+    order = s.order.map(o => Ord(f(o.expression), o.asc)))
 
   /** Whether subquery `q` references the enclosing frame (equality or
     * otherwise). Only Select subqueries participate; anything else keeps
@@ -1157,16 +1146,7 @@ object Planner {
   private def markOuter(c: Column, ctx: Ctx, table: Option[String],
       name: String): Column = (ctx.scope, ctx.outerScope) match {
     case (Some(inner), Some(outer)) =>
-      val isOuter = table match {
-        case None =>
-          val cf = normRef(name)
-          !inner.names(cf) && outer.names(cf)
-        case Some(t) =>
-          val tf = Names.casefold(t)
-          !inner.tables.contains(tf) &&
-            outer.tables.get(tf).exists(_(normRef(name)))
-      }
-      if (isOuter) c.outer() else c
+      if (isOuterRef(table, name, inner, outer)) c.outer() else c
     case _ => c
   }
 
@@ -1306,20 +1286,10 @@ object Planner {
   /** Column references of an expression that resolve in `inner`
     * (inner-first scoping, mirroring freeColRefs). */
   private def innerColRefs(e: Exp, inner: Scope): Seq[ExpCol] = e match {
-    case c @ ExpCol(None, name) if inner.names(normRef(name)) => Seq(c)
-    case c @ ExpCol(Some(t), _) if inner.tables.contains(Names.casefold(t)) => Seq(c)
-    case ExpCol(_, _) => Nil
-    case ExpSub(_) | ExpExists(_) => Nil
-    case ExpInQuery(x, _, _) => innerColRefs(x, inner)
-    case ExpInExp(x, _, es) => (x +: es).flatMap(innerColRefs(_, inner))
-    case ExpOp(_, os) => os.flatMap(innerColRefs(_, inner))
-    case ExpApp(_, _, args) => args.flatMap(innerColRefs(_, inner))
-    case ExpCase(k, ws, o) =>
-      (k.toSeq ++ ws.flatMap(w => Seq(w._1, w._2)) ++ o.toSeq)
-        .flatMap(innerColRefs(_, inner))
-    case ExpCast(x, _) => innerColRefs(x, inner)
-    case ExpCollate(x, _) => innerColRefs(x, inner)
-    case _ => Nil
+    case c @ ExpCol(None, name) => if (inner.names(normRef(name))) Seq(c) else Nil
+    case c @ ExpCol(Some(t), _) =>
+      if (inner.tables.contains(Names.casefold(t))) Seq(c) else Nil
+    case _ => children(e).flatMap(innerColRefs(_, inner))
   }
 
   /** Decorrelate `(SELECT agg(e) FROM t WHERE k = outer.k AND residual)`
@@ -1342,8 +1312,17 @@ object Planner {
       val outer = ctx.scope.get
       val inner = queryScope(ctx.bdb, s, ctx.binds)
       def refsOuter(e: Exp): Boolean = freeColRefs(e, inner, outer).nonEmpty
+      def countLike(e: Exp): Boolean = e match {
+        case ExpAppStar(fn) => Names.casefold(fn) == "count"
+        case ExpApp(_, fn, _) => Set("count", "total")(Names.casefold(fn))
+        case _ => false
+      }
+      // an item that merely contains COUNT/TOTAL (`count(*) + 1`,
+      // `count(*) IN (0)`) has a non-NULL value over an empty set that a
+      // coalesce after the join cannot give: the theta decorrelator takes it
       val aggItem = s.columns.head match {
-        case SelColExp(e, _) if containsAggregate(e) && !refsOuter(e) => Some(e)
+        case SelColExp(e, _) if containsAggregate(e) && !refsOuter(e) &&
+            (countLike(e) || !Ast.exists(e)(countLike)) => Some(e)
         case _ => None
       }
       aggItem.flatMap { aggExp =>
@@ -1392,13 +1371,8 @@ object Planner {
               "left_outer").drop(keyNames: _*)
           }
           // COUNT/TOTAL over an empty correlated set is 0, not NULL
-          val countLike = aggExp match {
-            case ExpAppStar(fn) => Names.casefold(fn) == "count"
-            case ExpApp(_, fn, _) => Set("count", "total")(Names.casefold(fn))
-            case _ => false
-          }
           val replacement =
-            if (countLike) ExpApp(distinct = false, "ifnull",
+            if (countLike(aggExp)) ExpApp(distinct = false, "ifnull",
               Seq(ExpCol(None, vName), ExpLit(LitInt(0))))
             else ExpCol(None, vName)
           Some((attach, replacement))
@@ -1508,29 +1482,12 @@ object Planner {
             case ExpExists(qq) => ExpExists(substQ(qq, chain))
             case ExpInQuery(x, p, qq) =>
               ExpInQuery(subst(x, chain), p, substQ(qq, chain))
-            case ExpOp(op, os) => ExpOp(op, os.map(subst(_, chain)))
-            case ExpApp(d, f, as_) => ExpApp(d, f, as_.map(subst(_, chain)))
-            case ExpCase(k, ws, o) => ExpCase(k.map(subst(_, chain)),
-              ws.map { case (a, b) => (subst(a, chain), subst(b, chain)) },
-              o.map(subst(_, chain)))
-            case ExpCast(x, t) => ExpCast(subst(x, chain), t)
-            case ExpCollate(x, cl) => ExpCollate(subst(x, chain), cl)
-            case ExpInExp(x, p, es) =>
-              ExpInExp(subst(x, chain), p, es.map(subst(_, chain)))
-            case other => other
+            case other => mapChildren(other)(subst(_, chain))
           }
           def substQ(qq: Query, chain: Seq[Scope]): Query = qq match {
             case ss: Select =>
               val ch = queryScope(ctx.bdb, ss, ctx.binds) +: chain
-              ss.copy(
-                columns = ss.columns.map {
-                  case SelColExp(e, nm) => SelColExp(subst(e, ch), nm)
-                  case other => other
-                },
-                condition = ss.condition.map(subst(_, ch)),
-                grouping = ss.grouping.map(g => Grouping(
-                  g.keys.map(subst(_, ch)), g.condition.map(subst(_, ch)))),
-                order = ss.order.map(o => Ord(subst(o.expression, ch), o.asc)))
+              mapSelectExps(ss)(subst(_, ch))
             case other => other
           }
           // null-shield aggregate arguments on the match condition (join
@@ -1544,14 +1501,7 @@ object Planner {
             case ExpApp(d, fn, args) if SqlFunctions.isAggregate(fn, args.length) =>
               ExpApp(d, fn, args.map(a =>
                 ExpCase(None, Seq((matchExp, a)), None)))
-            case ExpApp(d, fn, args) => ExpApp(d, fn, args.map(shield(_, matchExp)))
-            case ExpOp(op, os) => ExpOp(op, os.map(shield(_, matchExp)))
-            case ExpCase(k, ws, o) => ExpCase(k.map(shield(_, matchExp)),
-              ws.map { case (a, b) => (shield(a, matchExp), shield(b, matchExp)) },
-              o.map(shield(_, matchExp)))
-            case ExpCast(x, t) => ExpCast(shield(x, matchExp), t)
-            case ExpCollate(x, cl) => ExpCollate(shield(x, matchExp), cl)
-            case other => other
+            case other => mapChildren(other)(shield(_, matchExp))
           }
           val joinScope = Scope(
             inner.names ++ (marker +: keyName).map(Names.casefold),
@@ -1566,22 +1516,9 @@ object Planner {
           // non-decorrelatable scalar) keeps the named divergence.
           val deepPre = new SubqueryPrepass(jctx, aggSafe = true)
           val nestedCorr2 = nestedCorr.map(c => deepPre.rewrite(subst(c, Seq(inner))))
-          def stillCorrelated(e: Exp): Boolean = e match {
-            case ExpSub(qq) => isCorrelatedDeep(jctx, qq)
-            case ExpExists(qq) => isCorrelatedDeep(jctx, qq)
-            case ExpInQuery(x, _, qq) =>
-              stillCorrelated(x) || isCorrelatedDeep(jctx, qq)
-            case ExpOp(_, os) => os.exists(stillCorrelated)
-            case ExpApp(_, _, as_) => as_.exists(stillCorrelated)
-            case ExpCase(k, ws, o) =>
-              k.exists(stillCorrelated) ||
-                ws.exists(w => stillCorrelated(w._1) || stillCorrelated(w._2)) ||
-                o.exists(stillCorrelated)
-            case ExpCast(x, _) => stillCorrelated(x)
-            case ExpCollate(x, _) => stillCorrelated(x)
-            case ExpInExp(x, _, es) => (x +: es).exists(stillCorrelated)
-            case _ => false
-          }
+          def stillCorrelated(e: Exp): Boolean =
+            children(e).exists(stillCorrelated) ||
+              subqueryOf(e).exists(isCorrelatedDeep(jctx, _))
           if (nestedCorr2.exists(stillCorrelated)) None
           else {
             // inner FROM frame with aliases preserved (qualified refs keep
@@ -1590,19 +1527,8 @@ object Planner {
             // the INNER frame (e.g. requalifyDeep-peeled forms) decorrelate
             val innerPre = new SubqueryPrepass(innerCtx)
             val innerCs2 = innerCs.map(innerPre.rewrite)
-            val tabs: Seq[(String, DataFrame)] = s.tables.map { st =>
-              val d = st.table match {
-                case Right(name) => ctx.bdb.table(name)
-                case Left(sub) => plan(ctx.bdb, sub, ctx.binds)
-              }
-              val alias = st.name.getOrElse(st.table match {
-                case Right(name) => name
-                case Left(_) => "__sub__"
-              })
-              (alias, d)
-            }
-            val innerBase0 = innerPre(tabs.map { case (a, d) => d.as(a) }
-              .reduceLeft(_ crossJoin _))
+            val innerBase0 = innerPre(
+              crossJoinFrames(fromFrames(ctx.bdb, s.tables, ctx.binds)))
             val innerFiltered = innerCs2.map(compile(_, innerCtx)) match {
               case Nil => innerBase0
               case conds => innerBase0.filter(conds.reduce(_ && _))
@@ -1698,45 +1624,19 @@ object Planner {
       val outer = ctx.scope.get
       val inner = queryScope(ctx.bdb, s, ctx.binds)
       def refsOuter(e: Exp): Boolean = freeColRefs(e, inner, outer).nonEmpty
-      def hasNested(e: Exp): Boolean = e match {
-        case ExpSub(_) | ExpExists(_) | ExpInQuery(_, _, _) => true
-        case ExpOp(_, os) => os.exists(hasNested)
-        case ExpApp(_, _, as_) => as_.exists(hasNested)
-        case ExpCase(k, ws, o) =>
-          k.exists(hasNested) ||
-            ws.exists(w => hasNested(w._1) || hasNested(w._2)) ||
-            o.exists(hasNested)
-        case ExpCast(x, _) => hasNested(x)
-        case ExpCollate(x, _) => hasNested(x)
-        case ExpInExp(x, _, es) => (x +: es).exists(hasNested)
-        case _ => false
-      }
-      def litOf(e: Exp): Option[Long] =
-        e match { case ExpLit(LitInt(v)) => Some(v); case _ => None }
-      val rowTarget: Option[Long] = s.limit match {
-        case None => Some(1L)
-        case Some(Lim(l, off)) =>
-          val offN = off match {
-            case None => Some(0L)
-            case Some(e) => litOf(e)
-          }
-          (litOf(l), offN) match {
-            case (Some(n), Some(j)) if n >= 1 && j >= 0 => Some(j + 1)
-            case _ => None
-          }
-      }
+      val rowTarget = pickedRow(s)
       val g = s.grouping.get
       val itemOk = s.columns.head match {
-        case SelColExp(e, _) => !refsOuter(e) && !hasNested(e)
+        case SelColExp(e, _) => !refsOuter(e) && !hasNestedQuery(e)
         case _ => false
       }
       val clean = itemOk && rowTarget.isDefined &&
-        g.keys.forall(k => !refsOuter(k) && !hasNested(k)) &&
+        g.keys.forall(k => !refsOuter(k) && !hasNestedQuery(k)) &&
         // HAVING is allowed — including with theta-correlated outer refs
         // (substituted to the decorrelation key like the WHERE conjuncts)
         // — as long as it nests no subquery
-        g.condition.forall(h => !hasNested(h)) &&
-        s.order.forall(o => !refsOuter(o.expression) && !hasNested(o.expression)) &&
+        g.condition.forall(h => !hasNestedQuery(h)) &&
+        s.order.forall(o => !refsOuter(o.expression) && !hasNestedQuery(o.expression)) &&
         // a positional ORDER BY other than 1 is out of range for the
         // single select item (SQLite rejects it) — refuse rather than
         // compile the integer as a constant sort key
@@ -1749,7 +1649,7 @@ object Planner {
         val itemExp = s.columns.head.asInstanceOf[SelColExp].expression
         val itemAlias = s.columns.head.asInstanceOf[SelColExp].name
         val cs = s.condition.toSeq.flatMap(conjuncts)
-        if (cs.exists(hasNested)) None
+        if (cs.exists(hasNestedQuery)) None
         else {
           val (corrCs, innerCs) = cs.partition(refsOuter)
           // outer refs inside HAVING also become decorrelation keys (the
@@ -1775,30 +1675,11 @@ object Planner {
               case c: ExpCol if freeColRefs(c, inner, outer).nonEmpty =>
                 keyOf.get((c.table.map(Names.casefold), normRef(c.column)))
                   .map(k => ExpCol(None, k)).getOrElse(c)
-              case ExpOp(op, os) => ExpOp(op, os.map(subst))
-              case ExpApp(d, f, as_) => ExpApp(d, f, as_.map(subst))
-              case ExpCase(k, ws, o) => ExpCase(k.map(subst),
-                ws.map { case (a, b) => (subst(a), subst(b)) }, o.map(subst))
-              case ExpCast(x, t) => ExpCast(subst(x), t)
-              case ExpCollate(x, cl) => ExpCollate(subst(x), cl)
-              case ExpInExp(x, p, es) => ExpInExp(subst(x), p, es.map(subst))
-              case other => other
-            }
-            val tabs: Seq[(String, DataFrame)] = s.tables.map { st =>
-              val d = st.table match {
-                case Right(name) => ctx.bdb.table(name)
-                case Left(sub) => plan(ctx.bdb, sub, ctx.binds)
-              }
-              val alias = st.name.getOrElse(st.table match {
-                case Right(name) => name
-                case Left(_) => "__sub__"
-              })
-              (alias, d)
+              case other => mapChildren(other)(subst)
             }
             val innerCtx = Ctx(ctx.bdb, NoModelCtx, ctx.binds, agg = false,
               scope = Some(inner))
-            val innerBase0 = tabs.map { case (a, d) => d.as(a) }
-              .reduceLeft(_ crossJoin _)
+            val innerBase0 = crossJoinFrames(fromFrames(ctx.bdb, s.tables, ctx.binds))
             val innerFiltered = innerCs.map(compile(_, innerCtx)) match {
               case Nil => innerBase0
               case conds => innerBase0.filter(conds.reduce(_ && _))
@@ -1864,30 +1745,15 @@ object Planner {
     * resolve in `outer` — the depth-(chain length) correlation
     * witnesses. Non-Select nested queries block analysis (treated as
     * having no deep refs; they error later with the named divergence). */
-  private def chainFreeRefs(ctx: Ctx, e: Exp, chain: Seq[Scope], outer: Scope): Seq[ExpCol] = {
-    def resolves(t: Option[String], n: String, sc: Scope): Boolean = t match {
-      case None => sc.names(normRef(n))
-      case Some(tb) => sc.tables.get(Names.casefold(tb)).exists(_(normRef(n)))
-    }
+  private def chainFreeRefs(ctx: Ctx, e: Exp, chain: Seq[Scope], outer: Scope): Seq[ExpCol] =
     e match {
       case c @ ExpCol(t, n) =>
-        if (chain.exists(resolves(t, n, _))) Nil
-        else if (resolves(t, n, outer)) Seq(c) else Nil
-      case ExpSub(q) => queryChainRefs(ctx, q, chain, outer)
-      case ExpExists(q) => queryChainRefs(ctx, q, chain, outer)
-      case ExpInQuery(x, _, q) =>
-        chainFreeRefs(ctx, x, chain, outer) ++ queryChainRefs(ctx, q, chain, outer)
-      case ExpInExp(x, _, es) => (x +: es).flatMap(chainFreeRefs(ctx, _, chain, outer))
-      case ExpOp(_, os) => os.flatMap(chainFreeRefs(ctx, _, chain, outer))
-      case ExpApp(_, _, args) => args.flatMap(chainFreeRefs(ctx, _, chain, outer))
-      case ExpCase(k, ws, o) =>
-        (k.toSeq ++ ws.flatMap(w => Seq(w._1, w._2)) ++ o.toSeq)
-          .flatMap(chainFreeRefs(ctx, _, chain, outer))
-      case ExpCast(x, _) => chainFreeRefs(ctx, x, chain, outer)
-      case ExpCollate(x, _) => chainFreeRefs(ctx, x, chain, outer)
-      case _ => Nil
+        if (chain.exists(scopeResolves(t, n, _))) Nil
+        else if (scopeResolves(t, n, outer)) Seq(c) else Nil
+      case _ =>
+        children(e).flatMap(chainFreeRefs(ctx, _, chain, outer)) ++
+          subqueryOf(e).toSeq.flatMap(queryChainRefs(ctx, _, chain, outer))
     }
-  }
 
   private def queryChainRefs(ctx: Ctx, q: Query, chain: Seq[Scope], outer: Scope): Seq[ExpCol] =
     q match {
@@ -1975,15 +1841,11 @@ object Planner {
           case ExpCollate(x, _) => aliasesOf(x)
           case _ => Set.empty
         }
-        def resolves(t: Option[String], n: String, sc: Scope): Boolean = t match {
-          case None => sc.names(normRef(n))
-          case Some(tb) => sc.tables.get(Names.casefold(tb)).exists(_(normRef(n)))
-        }
         // walk expressions inside nested queries; `chain` holds the
         // frames from the ref's position up to (excluding) `s`'s frame
         def walkExp(e: Exp, chain: Seq[Scope]): Exp = e match {
           case c @ ExpCol(t, n) if chain.nonEmpty =>
-            if (chain.exists(resolves(t, n, _)) || resolves(t, n, inner)) c
+            if (chain.exists(scopeResolves(t, n, _)) || scopeResolves(t, n, inner)) c
             else {
               val key = ownerAlias(outer, t, n).map(a => (a, normRef(n)))
               key.flatMap(mapping.get) match {
@@ -1993,46 +1855,20 @@ object Planner {
                 case _ => c
               }
             }
-          case c: ExpCol => c
           case ExpSub(qq) => ExpSub(walkQuery(qq, chain))
           case ExpExists(qq) => ExpExists(walkQuery(qq, chain))
           case ExpInQuery(x, p, qq) => ExpInQuery(walkExp(x, chain), p, walkQuery(qq, chain))
-          case ExpInExp(x, p, es) => ExpInExp(walkExp(x, chain), p, es.map(walkExp(_, chain)))
-          case ExpOp(op, os) => ExpOp(op, os.map(walkExp(_, chain)))
-          case ExpApp(d, f, as_) => ExpApp(d, f, as_.map(walkExp(_, chain)))
-          case ExpCase(k, ws, o) => ExpCase(k.map(walkExp(_, chain)),
-            ws.map { case (a, b) => (walkExp(a, chain), walkExp(b, chain)) },
-            o.map(walkExp(_, chain)))
-          case ExpCast(x, t) => ExpCast(walkExp(x, chain), t)
-          case ExpCollate(x, cl) => ExpCollate(walkExp(x, chain), cl)
-          case other => other
+          case other => mapChildren(other)(walkExp(_, chain))
         }
         def walkQuery(qq: Query, chain: Seq[Scope]): Query = qq match {
           case ss: Select =>
-            val sc = queryScope(ctx.bdb, ss, ctx.binds)
-            val chain2 = chain :+ sc
-            ss.copy(
-              columns = ss.columns.map {
-                case SelColExp(e, nm) => SelColExp(walkExp(e, chain2), nm)
-                case other => other
-              },
-              condition = ss.condition.map(walkExp(_, chain2)),
-              grouping = ss.grouping.map(g =>
-                Grouping(g.keys.map(walkExp(_, chain2)), g.condition.map(walkExp(_, chain2)))),
-              order = ss.order.map(o => Ord(walkExp(o.expression, chain2), o.asc)))
+            val chain2 = chain :+ queryScope(ctx.bdb, ss, ctx.binds)
+            mapSelectExps(ss)(walkExp(_, chain2))
           case other => other
         }
         // top level: only expressions INSIDE nested queries are touched
         // (chain starts empty; ExpCol with empty chain is left alone)
-        s.copy(
-          columns = s.columns.map {
-            case SelColExp(e, nm) => SelColExp(walkExp(e, Nil), nm)
-            case other => other
-          },
-          condition = s.condition.map(walkExp(_, Nil)),
-          grouping = s.grouping.map(g =>
-            Grouping(g.keys.map(walkExp(_, Nil)), g.condition.map(walkExp(_, Nil)))),
-          order = s.order.map(o => Ord(walkExp(o.expression, Nil), o.asc)))
+        mapSelectExps(s)(walkExp(_, Nil))
       }
     case other => other
   }
@@ -2077,10 +1913,6 @@ object Planner {
         case _ => false
       }
     if (!plain) return None
-    def aliasOf(t: SelTab): String = t.name.getOrElse(t.table match {
-      case Right(n) => n
-      case Left(_) => "__sub__"
-    })
     val subAliasCf = Names.casefold(aliasOf(st))
     val others = cur.tables.filterNot(_ eq st)
     val otherAliases = others.map(t => Names.casefold(aliasOf(t))).toSet
@@ -2101,24 +1933,12 @@ object Planner {
       case ExpCol(None, n) =>
         if (subScope.names(normRef(n))) ownerAlias(n).map(a => ExpCol(Some(a), n))
         else Some(e)
-      case c: ExpCol => Some(c)
-      case ExpOp(op, os) => seqOpt(os.map(qualifyInner)).map(ExpOp(op, _))
-      case ExpApp(d, f, as_) => seqOpt(as_.map(qualifyInner)).map(ExpApp(d, f, _))
-      case ExpCase(k, ws, o) =>
-        for {
-          k2 <- k.map(qualifyInner).map(_.map(Some(_))).getOrElse(Some(None))
-          ws2 <- seqOpt(ws.map { case (a, b) =>
-            for (a2 <- qualifyInner(a); b2 <- qualifyInner(b)) yield (a2, b2) })
-          o2 <- o.map(qualifyInner).map(_.map(Some(_))).getOrElse(Some(None))
-        } yield ExpCase(k2, ws2, o2)
-      case ExpCast(x, t) => qualifyInner(x).map(ExpCast(_, t))
-      case ExpCollate(x, c) => qualifyInner(x).map(ExpCollate(_, c))
-      case ExpInExp(x, p, es) =>
-        for (x2 <- qualifyInner(x); es2 <- seqOpt(es.map(qualifyInner)))
-          yield ExpInExp(x2, p, es2)
-      case l: ExpLit => Some(l)
-      case p: ExpNumpar => Some(p)
-      case p: ExpNampar => Some(p)
+      case _: ExpCol | _: ExpLit | _: ExpNumpar | _: ExpNampar => Some(e)
+      case _: ExpOp | _: ExpApp | _: ExpCase | _: ExpCast | _: ExpCollate | _: ExpInExp =>
+        seqOpt(children(e).map(qualifyInner)).map { qs =>
+          val next = qs.iterator
+          mapChildren(e)(_ => next.next())
+        }
       case _ => None
     }
     // output name (casefold) → replacement expression on the merged frame
@@ -2144,21 +1964,9 @@ object Planner {
         })).exists(mentions)
       case _ => false
     }
-    def mentions(e: Exp): Boolean = e match {
+    def mentions(e: Exp): Boolean = Ast.exists(e) {
       case ExpCol(Some(t), _) => Names.casefold(t) == subAliasCf
-      case ExpCol(None, _) => false
-      case ExpSub(qq) => queryMentions(qq)
-      case ExpExists(qq) => queryMentions(qq)
-      case ExpInQuery(x, _, qq) => mentions(x) || queryMentions(qq)
-      case ExpInExp(x, _, es) => (x +: es).exists(mentions)
-      case ExpOp(_, os) => os.exists(mentions)
-      case ExpApp(_, _, as_) => as_.exists(mentions)
-      case ExpCase(k, ws, o) =>
-        k.exists(mentions) || ws.exists(w => mentions(w._1) || mentions(w._2)) ||
-          o.exists(mentions)
-      case ExpCast(x, _) => mentions(x)
-      case ExpCollate(x, _) => mentions(x)
-      case _ => false
+      case x => subqueryOf(x).exists(queryMentions)
     }
     // rewrite the enclosing query's refs to the sub's outputs
     def rw(e: Exp): Exp = e match {
@@ -2175,14 +1983,7 @@ object Planner {
       case nested @ (ExpSub(_) | ExpExists(_) | ExpInQuery(_, _, _)) =>
         // nested bodies are not rewritten; bail if one names the alias
         if (mentions(nested)) throw Bail else nested
-      case ExpOp(op, os) => ExpOp(op, os.map(rw))
-      case ExpApp(d, f, as_) => ExpApp(d, f, as_.map(rw))
-      case ExpCase(k, ws, o) => ExpCase(k.map(rw),
-        ws.map { case (a, b) => (rw(a), rw(b)) }, o.map(rw))
-      case ExpCast(x, t) => ExpCast(rw(x), t)
-      case ExpCollate(x, cl) => ExpCollate(rw(x), cl)
-      case ExpInExp(x, p, es) => ExpInExp(rw(x), p, es.map(rw))
-      case other => other
+      case other => mapChildren(other)(rw)
     }
     try {
       val cols2 = cur.columns.map {
@@ -2215,8 +2016,6 @@ object Planner {
     * provably yields NO row, i.e. scalar NULL. */
   private def normalizeAggScalar(q: Query): Either[Unit, Query] = q match {
     case s: Select =>
-      def litOf(e: Exp): Option[Long] =
-        e match { case ExpLit(LitInt(v)) => Some(v); case _ => None }
       val limLit = s.limit.flatMap(l => litOf(l.limit))
       val offLit = s.limit.flatMap(_.offset) match {
         case None => Some(0L)
@@ -2235,6 +2034,21 @@ object Planner {
         Right(s.copy(order = Nil, limit = None))
       else Right(s)
     case other => Right(other)
+  }
+
+  private def litOf(e: Exp): Option[Long] =
+    e match { case ExpLit(LitInt(v)) => Some(v); case _ => None }
+
+  /** The 1-based rank of the row a grouped scalar takes: LIMIT must keep
+    * at least that row and OFFSET shifts it; None unless both are
+    * literals that allow a row. */
+  private def pickedRow(s: Select): Option[Long] = s.limit match {
+    case None => Some(1L)
+    case Some(Lim(l, off)) =>
+      (litOf(l), off.fold(Option(0L))(litOf)) match {
+        case (Some(n), Some(j)) if n >= 1 && j >= 0 => Some(j + 1)
+        case _ => None
+      }
   }
 
   /** Decorrelate a GROUPED, ordered, limited correlated scalar subquery —
@@ -2265,21 +2079,7 @@ object Planner {
       val outer = ctx.scope.get
       val inner = queryScope(ctx.bdb, s, ctx.binds)
       def refsOuter(e: Exp): Boolean = freeColRefs(e, inner, outer).nonEmpty
-      def litOf(e: Exp): Option[Long] =
-        e match { case ExpLit(LitInt(v)) => Some(v); case _ => None }
-      // LIMIT must keep at least the picked row; OFFSET shifts the pick
-      val rowTarget: Option[Long] = s.limit match {
-        case None => Some(1L)
-        case Some(Lim(l, off)) =>
-          val offN = off match {
-            case None => Some(0L)
-            case Some(e) => litOf(e)
-          }
-          (litOf(l), offN) match {
-            case (Some(n), Some(j)) if n >= 1 && j >= 0 => Some(j + 1)
-            case _ => None
-          }
-      }
+      val rowTarget = pickedRow(s)
       val itemOk = s.columns.head match {
         case SelColExp(e, _) => !refsOuter(e)
         case _ => false
@@ -2490,28 +2290,14 @@ object Planner {
         if (positive) in else !in
       } }
     case ExpInExp(x, positive, es) =>
+      // constant elements compile to literals, which OptimizeIn sees
       val in =
         if (es.isEmpty) lit(false)
-        else compile(x, ctx).isInCollection(es.map(e => constOrNull(ctx, e)))
+        else compile(x, ctx).isin(es.map(compile(_, ctx)): _*)
       if (positive) in else !in
     case ExpOp(op, operands) => compileOp(op, operands, ctx)
     case bqlExp if isBql(bqlExp) => compileBql(bqlExp, ctx)
     case other => throw new IllegalArgumentException(s"Cannot compile: $other")
-  }
-
-  /** IN-list operands are usually literals; fall back to compiled Columns
-    * only if needed. */
-  private def constOrNull(ctx: Ctx, e: Exp): Any = e match {
-    case ExpLit(LitInt(v)) => v
-    case ExpLit(LitFloat(v)) => v
-    case ExpLit(LitString(v)) => v
-    case ExpLit(LitNull) => null
-    case ExpNumpar(n) => bindValue(ctx.binds, n)
-    case ExpNampar(n, _) => bindValue(ctx.binds, n)
-    case ExpOp(Op.Negate, Seq(ExpLit(LitInt(v)))) => -v
-    case ExpOp(Op.Negate, Seq(ExpLit(LitFloat(v)))) => -v
-    case other => throw new IllegalArgumentException(
-      s"IN-list element must be a literal: $other")
   }
 
   /** NOCASE collation wrapping at comparison sites (reference: SQLite
@@ -2755,17 +2541,9 @@ object Planner {
   def evalConstDouble(bdb: BayesDB, e: Exp, binds: Seq[Any]): Double =
     numeric(evalConst(bdb, e, binds))
 
-  private def containsAggregate(e: Exp): Boolean = e match {
-    case ExpApp(_, fn, args) =>
-      SqlFunctions.isAggregate(fn, args.length) || args.exists(containsAggregate)
+  private def containsAggregate(e: Exp): Boolean = Ast.exists(e) {
+    case ExpApp(_, fn, args) => SqlFunctions.isAggregate(fn, args.length)
     case ExpAppStar(fn) => Names.casefold(fn) == "count"
-    case ExpOp(_, os) => os.exists(containsAggregate)
-    case ExpCase(k, ws, o) =>
-      k.exists(containsAggregate) ||
-        ws.exists(w => containsAggregate(w._1) || containsAggregate(w._2)) ||
-        o.exists(containsAggregate)
-    case ExpCast(x, _) => containsAggregate(x)
-    case ExpCollate(x, _) => containsAggregate(x)
     case _ => false
   }
 
@@ -2981,38 +2759,19 @@ object Planner {
           val vals = ms.map(m => evalModelExp(ctx.bdb, pm, m, ast, ctx.binds))
           vals.sum / vals.length
         }
-        // recursion mirrors the expression shapes the event grammar can
-        // nest an estimator under (operators, CASE, CAST, COLLATE,
-        // function calls, IN-lists) — not just ExpOp, so
-        // `probability of (abs(mutual information with x) > t)` binds
-        def hasImplicit(e: Exp): Boolean = e match {
+        // the estimator may sit under any expression shape the event
+        // grammar nests (operators, CASE, CAST, COLLATE, function calls,
+        // IN-lists), so `probability of (abs(mutual information with x)
+        // > t)` binds
+        def hasImplicit(e: Exp): Boolean = Ast.exists(e) {
           case ExpBQLMutInf(Seq(), _, _, _) => true
           case ExpBQLDepProb(None, Some(_)) => true
-          case ExpOp(_, os) => os.exists(hasImplicit)
-          case ExpApp(_, _, os) => os.exists(hasImplicit)
-          case ExpCast(x, _) => hasImplicit(x)
-          case ExpCollate(x, _) => hasImplicit(x)
-          case ExpInExp(x, _, xs) => hasImplicit(x) || xs.exists(hasImplicit)
-          case ExpCase(k, whens, els) =>
-            k.exists(hasImplicit) ||
-              whens.exists { case (w, t) => hasImplicit(w) || hasImplicit(t) } ||
-              els.exists(hasImplicit)
           case _ => false
         }
         def bindVar(e: Exp, v: String): Exp = e match {
           case ExpBQLMutInf(Seq(), c1, cs, n) => ExpBQLMutInf(Seq(v), c1, cs, n)
           case ExpBQLDepProb(None, c1 @ Some(_)) => ExpBQLDepProb(Some(v), c1)
-          case ExpOp(op, os) => ExpOp(op, os.map(bindVar(_, v)))
-          case ExpApp(d, op, os) => ExpApp(d, op, os.map(bindVar(_, v)))
-          case ExpCast(x, t) => ExpCast(bindVar(x, v), t)
-          case ExpCollate(x, c) => ExpCollate(bindVar(x, v), c)
-          case ExpInExp(x, p, xs) =>
-            ExpInExp(bindVar(x, v), p, xs.map(bindVar(_, v)))
-          case ExpCase(k, whens, els) =>
-            ExpCase(k.map(bindVar(_, v)),
-              whens.map { case (w, t) => (bindVar(w, v), bindVar(t, v)) },
-              els.map(bindVar(_, v)))
-          case other => other
+          case other => mapChildren(other)(bindVar(_, v))
         }
         ctx.bql match {
           case ColCtx(_) if hasImplicit(inner) =>

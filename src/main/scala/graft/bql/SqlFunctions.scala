@@ -24,9 +24,6 @@ object SqlFunctions {
     else if (x == math.rint(x)) Double.NaN  // poles at 0, -1, -2, …
     else math.Pi / (math.sin(math.Pi * x) * math.exp(SpecialMath.lgamma(1.0 - x)))
 
-  def factorialFn(n: Int): Double =
-    if (n < 0) Double.NaN else gammaFn(n + 1.0)
-
   /** Register the math UDF surface on the session, once: every
     * `BayesDB` calls this, and a session that already has all eight
     * functions keeps its registrations (re-registering would replace

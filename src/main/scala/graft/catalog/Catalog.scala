@@ -148,7 +148,6 @@ final class Catalog extends Serializable {
   }
 
   def populationNames: Seq[String] = populations.values.map(_.name).toSeq.sorted
-  def generatorNames: Seq[String] = generators.values.map(_.name).toSeq.sorted
 
   /** Attach latent variables (colno < 0) to a population on behalf of a
     * generator (reference: bayesdb_add_latent, src/core.py:398-414). No

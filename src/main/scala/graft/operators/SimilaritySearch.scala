@@ -102,14 +102,6 @@ object SimilaritySearch {
       .orderBy(col("approx_cosine").desc, col("neighbor_id").asc)
   }
 
-  /** 64-bit random-hyperplane signature: bit i = sign(v · r_i) where r_i
-    * is a deterministic pseudo-random ±1 hyperplane. Row-local, no
-    * shuffle — a native Catalyst expression reading the raw float array
-    * data with per-executor precomputed planes (see
-    * [[graft.functions.HyperplaneSignature64]]). */
-  def hyperplaneSignature(seed: Long)(vec: Column): Column =
-    graft.functions.HyperplaneSignature64(vec, seed)
-
   /** Embedding near-duplicate pairs: hyperplane-LSH buckets → exact
     * cosine on candidates only. Returns (id0, id1, cosine) with
     * cosine >= minCosine. Chunks give recall on pairs whose signatures

@@ -117,6 +117,57 @@ class BqlExecSpec extends AnyFunSuite {
     assert(one("select exists (select 1 from t1 where age > 100)") == false)
   }
 
+  // nation/customer keyed as in TPC-H: nation k < 24 has 58 + k % 5
+  // customers, so both 60 and 61 occur as per-nation counts; nation 24
+  // has none, so a correlated count over it aggregates an empty set
+  private lazy val tpch: BayesDB = {
+    val b = new BayesDB(spark, seed = 7L)
+    import spark.implicits._
+    b.registerTable("nation",
+      (0L until 25L).map(k => (k, k % 5)).toDF("n_nationkey", "n_regionkey"))
+    b.registerTable("customer",
+      (for (k <- 0L until 24L; i <- 0L until 58L + k % 5) yield (k * 100 + i, k))
+        .toDF("c_custkey", "c_nationkey"))
+    b
+  }
+
+  private def tpchRows(sql: String): Seq[Seq[Any]] =
+    tpch.execute(sql).collect().toSeq.map(_.toSeq)
+
+  test("aggregates under an IN-list, plain and in a correlated scalar") {
+    assert(tpchRows("SELECT count(*) IN (25) AS x FROM nation") == Seq(Seq(true)))
+    def perNation(item: String) = tpchRows(s"SELECT n_nationkey, (SELECT $item" +
+      " FROM customer WHERE c_nationkey = n_nationkey) AS k FROM nation ORDER BY n_nationkey")
+    val inList = perNation("count(*) IN (60, 61)")
+    assert(inList == perNation("count(*) = 60 OR count(*) = 61"))
+    assert(inList.count(_(1) == true) == 10)
+    // over the empty set the item sees count 0, not NULL
+    assert(inList.last == Seq(24L, false))
+    assert(perNation("count(*) IN (0)").last == Seq(24L, true))
+    assert(perNation("count(*) + 1").last == Seq(24L, 1L))
+    assert(perNation("count(*)").last == Seq(24L, 0L))
+  }
+
+  test("IN-lists with expression elements equal their = / OR spelling") {
+    def pair(inList: String, orSpelled: String): Unit = {
+      def q(p: String) = tpchRows(
+        s"SELECT n_nationkey, $p AS k FROM nation ORDER BY n_nationkey")
+      val got = q(inList)
+      assert(got == q(orSpelled))
+      assert(got.exists(_(1) == true))
+    }
+    pair("n_nationkey IN (1, n_regionkey)",
+      "n_nationkey = 1 OR n_nationkey = n_regionkey")
+    // the correlated element decorrelates into a column first
+    val sub = "(SELECT max(c_nationkey) FROM customer WHERE c_nationkey < n_nationkey)"
+    pair(s"n_nationkey IN (1, $sub)", s"n_nationkey = 1 OR n_nationkey = $sub")
+    // constant elements, a negated one included, reach the optimizer as
+    // literals: a list over its threshold becomes one InSet
+    val plan = tpch.execute("SELECT n_nationkey FROM nation WHERE n_nationkey IN (" +
+      (-1 to 12).mkString(", ") + ")").queryExecution.optimizedPlan.toString
+    assert(plan.contains("INSET"), plan)
+  }
+
   test("escaped GLOB / REGEXP; MATCH rejected as divergence D1") {
     // ESCAPE makes the next pattern character literal
     assert(one("select 'a*b' glob 'a!*b' escape '!'") == true)

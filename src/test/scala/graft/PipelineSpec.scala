@@ -2605,7 +2605,11 @@ class PipelineSpec extends AnyFunSuite {
       (102L, "multi   spacevt\ngamma"), (103L, "UPPER Case MiXeD beta"),
       (104L, "naïve café 中文 beta"), (105L, ""), (106L, "one"),
       (107L, null.asInstanceOf[String]), (108L, "beta beta beta beta"),
-      (109L, "  nbsp is not java ws beta"))
+      (109L, "  nbsp is not java ws beta"),
+      // NUL is not whitespace, so it stays inside a token: the pairs
+      // (a<NUL>b, c) of reference doc 111 and (a, b<NUL>c) of doc 112
+      // must not share a bigram entry
+      (111L, "a\u0000b c"), (112L, "a b\u0000c"))
     val df = (random ++ nasty).toDF("doc_id", "text")
     val refCond = pmod(col("doc_id"), lit(3)) === 0
     val model = graft.operators.TextAnalysis.lmModelFor(df, "text", refCond)
