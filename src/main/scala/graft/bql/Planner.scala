@@ -18,13 +18,11 @@ import Ast._
   * row/column expressions its estimators need.
   *
   * Subquery policy (README divergence D3):
-  *  - uncorrelated scalar subqueries are evaluated at plan time and
-  *    inlined as literals;
-  *  - uncorrelated IN / NOT IN / EXISTS that are top-level WHERE conjuncts
-  *    plan as left-semi / null-aware left-anti joins (EXISTS as a one-row
-  *    semi join), so the subquery result never reaches the driver; in a
-  *    nested position (e.g. under OR) EXISTS folds to a plan-time literal
-  *    and IN inlines its values, capped by `graft.bql.inlist.maxValues`;
+  *  - uncorrelated subqueries stay in the plan: a scalar compiles to a
+  *    one-row Catalyst scalar subquery, EXISTS and IN to Catalyst's
+  *    exists / in-subquery expressions, in any position. Catalyst's own
+  *    rules make the joins (a top-level IN a left-semi join, NOT IN the
+  *    null-aware left-anti join); planning runs no Spark job;
   *  - correlated subqueries decorrelate: aggregate scalars into grouped
   *    left joins (equality correlation) or theta joins (any other
   *    operator), with scalars sharing FROM, WHERE and key tuple folded into
@@ -480,7 +478,7 @@ object Planner {
     require(ridGivens.length <= 1,
       "SIMULATE GIVEN accepts at most one rowid designator")
     val givenRowid = ridGivens.headOption.map { case (_, e) =>
-      evalConstInt(bdb, bindParams(e, binds), binds).toLong }
+      evalConstInt(bdb, e, binds).toLong }
     val constraints = varGivens.map { case (c, e) =>
       c -> Estimators.encodeValue(pm, c, evalConst(bdb, e, binds))
     }
@@ -557,8 +555,7 @@ object Planner {
         // ORDER BY and a constant LIMIT n≠0 drop too (existence is
         // order- and cap-insensitive); LIMIT 0 is provably empty.
         subCache.getOrElseUpdate(ex, {
-          val limN = q.limit.map(l =>
-            evalConstInt(ctx0.bdb, bindParams(l.limit, ctx0.binds), ctx0.binds))
+          val limN = q.limit.map(l => evalConstInt(ctx0.bdb, l.limit, ctx0.binds))
           if (limN.contains(0))
             ExpOp(Op.Eq, Seq(ExpLit(LitInt(0)), ExpLit(LitInt(1))))
           else rewrite(ExpOp(Op.Gt, Seq(
@@ -748,8 +745,7 @@ object Planner {
     val limitOk = q.limit match {
       case None => true
       case Some(Lim(l, None)) =>
-        scala.util.Try(
-          evalConstInt(ctx.bdb, bindParams(l, ctx.binds), ctx.binds)).isSuccess
+        scala.util.Try(evalConstInt(ctx.bdb, l, ctx.binds)).isSuccess
       case Some(Lim(_, Some(_))) => false
     }
     groupOk && limitOk
@@ -834,48 +830,7 @@ object Planner {
         s.copy(names = s.names ++ hs.map(Names.casefold))))
     }
 
-    val filtered = condition1 match {
-      case Some(cond) =>
-        // Scale-safe membership: top-level AND-conjuncts of the form
-        // `x IN (subquery)` / `EXISTS (subquery)` become semi/anti joins so
-        // the subquery result never collects to the driver (the nested
-        // fallback in `compile` stays for metadata-sized positions).
-        // Correlated forms stay in the residual — compile plans them as
-        // native exists-subquery expressions, which Catalyst turns into
-        // the same semi/anti hash joins after decorrelation.
-        val (joinable, residual) = conjuncts(cond).partition {
-          case ExpInQuery(_, _, q) => !isCorrelated(ctx, q)
-          case ExpExists(q) => !isCorrelated(ctx, q)
-          case _ => false
-        }
-        val joined = joinable.foldLeft(base1) {
-          case (df, ExpInQuery(x, positive, q)) =>
-            val sub = planSubquery(ctx, q)
-            val v = s"__in_v_${subqueryTag.getAndIncrement()}"
-            val subv = sub.select(col(sub.columns.head).as(v)).distinct()
-            val key = compile(x, ctx)
-            if (positive) df.join(subv, key === col(v), "left_semi")
-            else
-              // null-aware NOT IN: a null key or any null element means the
-              // predicate is NULL (row filtered), an empty set keeps all
-              // rows. The `k = v OR isnull(k = v)` shape is Spark's
-              // canonical single-column null-aware anti join, which the
-              // planner executes as an optimized hash join rather than a
-              // nested-loop join (spark.sql.optimizeNullAwareAntiJoin).
-              df.join(subv, (key === col(v)) || (key === col(v)).isNull,
-                "left_anti")
-          case (df, ExpExists(q)) =>
-            // uncorrelated EXISTS: keep all rows iff the subquery is
-            // non-empty — a one-row semi-join, no plan-time count()
-            df.join(planSubquery(ctx, q).limit(1), lit(true), "left_semi")
-          case (df, _) => df
-        }
-        residual.map(compile(_, ctx)) match {
-          case Nil => joined
-          case cs => joined.filter(cs.reduceLeft(_ && _))
-        }
-      case None => base1
-    }
+    val filtered = condition1.fold(base1)(cond => base1.filter(compile(cond, ctx)))
 
     // expand select items to (outputName, Exp)
     var autoIdx = -1
@@ -981,9 +936,9 @@ object Planner {
     limit match {
       case None => distincted
       case Some(Lim(l, off)) =>
-        val n = evalConstInt(ctx.bdb, bindParams(l, ctx.binds), ctx.binds)
+        val n = evalConstInt(ctx.bdb, l, ctx.binds)
         val withOff = off match {
-          case Some(o) => distincted.offset(evalConstInt(ctx.bdb, bindParams(o, ctx.binds), ctx.binds))
+          case Some(o) => distincted.offset(evalConstInt(ctx.bdb, o, ctx.binds))
           case None => distincted
         }
         withOff.limit(n)
@@ -1202,8 +1157,7 @@ object Planner {
     val limitEmpty: Option[Boolean] = s.limit match {
       case None => Some(false)
       case Some(Lim(l, None)) =>
-        scala.util.Try(
-          evalConstInt(ctx.bdb, bindParams(l, ctx.binds), ctx.binds))
+        scala.util.Try(evalConstInt(ctx.bdb, l, ctx.binds))
           .toOption.map(_ == 0)
       case Some(Lim(_, Some(_))) => None
     }
@@ -1237,8 +1191,7 @@ object Planner {
     val limitOk = s.limit match {
       case None => true
       case Some(Lim(l, None)) =>
-        scala.util.Try(
-          evalConstInt(ctx.bdb, bindParams(l, ctx.binds), ctx.binds))
+        scala.util.Try(evalConstInt(ctx.bdb, l, ctx.binds))
           .toOption.exists(_ != 0)
       case Some(Lim(_, Some(_))) => false
     }
@@ -1263,8 +1216,7 @@ object Planner {
     val limitEmpty: Option[Boolean] = s.limit match {
       case None => Some(false)
       case Some(Lim(l, None)) =>
-        scala.util.Try(
-          evalConstInt(ctx.bdb, bindParams(l, ctx.binds), ctx.binds))
+        scala.util.Try(evalConstInt(ctx.bdb, l, ctx.binds))
           .toOption.filter(_ == 0).map(_ => true)
       case Some(_) => None
     }
@@ -2206,7 +2158,8 @@ object Planner {
       count(lit(1))
     case ExpSub(q) =>
       if (isCorrelated(ctx, q)) correlatedScalar(ctx, q)
-      else lit(scalarSubquery(ctx, q))
+      // LIMIT 1: a multi-row scalar yields its first row, as in SQLite
+      else planSubquery(ctx, q).limit(1).scalar()
     case ExpExists(q) =>
       if (isCorrelated(ctx, q)) q match {
         case s: Select => existenceBody(ctx, s) match {
@@ -2221,7 +2174,7 @@ object Planner {
         }
         case other => planWithOuter(ctx, other).exists()
       }
-      else lit(planSubquery(ctx, q).limit(1).count() > 0)
+      else planSubquery(ctx, q).exists()
     case ExpInQuery(x, positive, q0) =>
       // normalize a correlated body to its membership-equivalent plain
       // form first; an empty-set body short-circuits to the constant
@@ -2273,20 +2226,7 @@ object Planner {
         if (positive) sub.filter(v === xo).exists()
         else !sub.filter((v === xo) || (v === xo).isNull).exists()
       } else {
-        // uncorrelated IN in a position Catalyst's semi-join form cannot
-        // take (e.g. nested under OR): the subquery values inline into an
-        // isin list, which lives in the plan and on the driver — bound it
-        // like the relevance condition collect so a huge subquery fails
-        // loudly instead of OOMing the driver at scale.
-        val cap = ctx.bdb.spark.conf
-          .getOption("graft.bql.inlist.maxValues")
-          .map(_.toInt).getOrElse(100000)
-        val values = planSubquery(ctx, q).limit(cap + 1).collect().map(_.get(0)).toSeq
-        if (values.length > cap) throw new IllegalArgumentException(
-          s"IN (subquery) in this position inlines the subquery result, " +
-            s"which exceeded $cap rows; rewrite as a top-level conjunct " +
-            "(semi-join form) or raise graft.bql.inlist.maxValues")
-        val in = compile(x, ctx).isin(values: _*)
+        val in = compile(x, ctx).isin(planSubquery(ctx, q))
         if (positive) in else !in
       } }
     case ExpInExp(x, positive, es) =>
@@ -2481,14 +2421,7 @@ object Planner {
       case other => other  // let Spark resolve (date, timestamp, …)
     }
 
-  // --------------------------------------------------- subquery helpers
-
-  private def scalarSubquery(ctx: Ctx, q: Query): Any = {
-    val rows = planSubquery(ctx, q).limit(1).collect()
-    if (rows.isEmpty) null else rows.head.get(0)
-  }
-
-  private def bindParams(e: Exp, binds: Seq[Any]): Exp = e  // params resolved in evalConst
+  // ------------------------------------------------ plan-time constants
 
   def bindValue(binds: Seq[Any], n: Int): Any = {
     require(n >= 1 && n <= binds.length, s"Missing parameter ?$n")

@@ -139,8 +139,8 @@ object BqlQueries {
       |ORDER BY n_customers DESC, n.n_name
       |LIMIT 10""".stripMargin
 
-  /** b03: IN-subquery + scalar subquery through the planner's plan-time
-    * evaluation. */
+  /** b03: IN-subquery + scalar subquery, both kept in the plan as
+    * Catalyst subquery expressions. */
   val b03Subquery: Q = (spark, dir) => bdb(spark, dir).execute(
     """SELECT c_custkey, c_acctbal
       |FROM customer
@@ -468,7 +468,7 @@ object BqlQueries {
       |FROM PAIRWISE VARIABLES OF lpop MODELED BY lcomp
       |ORDER BY name0, name1""".stripMargin)
 
-  /** b17: EXISTS + NOT IN + BETWEEN through plan-time subquery eval. */
+  /** b17: EXISTS + NOT IN + BETWEEN, subqueries kept in the plan. */
   val b17Exists: Q = (spark, dir) => bdb(spark, dir).execute(
     """SELECT s_suppkey, s_name
       |FROM supplier

@@ -85,19 +85,14 @@ class ErrorSurfaceSpec extends AnyFunSuite {
     assert(ok.length == 2)
   }
 
-  test("inlined IN-subquery values are bounded") {
-    // IN under OR takes the inline-isin fallback (no semi-join position);
-    // over the cap it must fail naming the knob, not collect unbounded
-    spark.conf.set("graft.bql.inlist.maxValues", "1")
-    try {
-      val msg = messageOf(bdb.execute(
-        "select * from et where id in (select id from et) or x > 99").collect())
-      assert(msg.contains("maxValues"), msg)
-    } finally spark.conf.unset("graft.bql.inlist.maxValues")
-    // default cap: same query runs and keeps IN-or-OR semantics
-    val ok = bdb.execute(
-      "select * from et where id in (select id from et) or x > 99").collect()
-    assert(ok.length == 2)
+  test("IN-subquery under OR plans with no Spark job") {
+    // the subquery stays in the plan: nothing is collected while planning
+    val sql = "select * from et where id in (select id from et) or x > 99"
+    bdb  // registration runs jobs of its own
+    val (df, jobs) = SparkJobs.during(bdb.execute(sql))
+    assert(jobs == 0, s"planning started $jobs Spark job(s)")
+    // and the query keeps IN-or-OR semantics
+    assert(df.collect().length == 2)
   }
 
   test("pipeline-operator parameter misuse fails at the call, not mid-job") {

@@ -51,9 +51,18 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(bdb.execute(empty).count() == 6)
   }
 
-  test("uncorrelated EXISTS conjunct plans as a one-row semi join") {
+  test("uncorrelated EXISTS conjunct plans as a one-row scalar subquery, no join") {
     val pos = "select id from t1 where exists (select 1 from refs where tag = 'a') and age > 30"
-    assert(optimized(pos).contains("LeftSemi"))
+    // RewriteNonCorrelatedExists: isnotnull(scalar-subquery(LIMIT 1))
+    import org.apache.spark.sql.catalyst.expressions.{IntegerLiteral, ScalarSubquery}
+    import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, Join}
+    val plan = bdb.execute(pos).queryExecution.optimizedPlan
+    val subs = plan.flatMap(_.expressions.flatMap(_.collect { case s: ScalarSubquery => s.plan }))
+    assert(subs.nonEmpty && subs.forall(_.exists {
+      case GlobalLimit(IntegerLiteral(1), _) => true
+      case _ => false
+    }), plan)
+    assert(plan.collectFirst { case j: Join => j }.isEmpty, plan)
     assert(bdb.execute(pos).collect().map(_.getLong(0)).sorted.toSeq == Seq(2L, 3L, 4L))
     val neg = "select id from t1 where exists (select 1 from refs where tag = 'zzz')"
     assert(bdb.execute(neg).count() == 0)
@@ -793,11 +802,7 @@ object FinalShuffles extends org.apache.spark.sql.execution.adaptive.AdaptiveSpa
   * multi-partition table keeps its partitions and its shuffles. */
 class OnePartitionTableSpec extends AnyFunSuite {
   import TestSpark._
-  import java.util.concurrent.atomic.AtomicInteger
-  import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
   import org.apache.spark.sql.DataFrame
-
-  private val group = "one-partition-table-spec"
 
   /** 40 rows over `parts` slices of an RDD scan, which (like a file scan)
     * reports unknown partitioning, even over one slice; values are small
@@ -815,21 +820,8 @@ class OnePartitionTableSpec extends AnyFunSuite {
 
   /** Collects `df`; returns its rows and the number of Spark jobs the
     * collect ran. */
-  private def run(df: DataFrame): (Seq[Seq[Any]], Int) = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == group) jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "one-partition table spec")
-    val rows = try df.collect().toSeq.map(_.toSeq) finally sc.clearJobGroup()
-    org.apache.spark.ListenerBusDrain(sc)
-    sc.removeSparkListener(listener)
-    (rows, jobs.get)
-  }
+  private def run(df: DataFrame): (Seq[Seq[Any]], Int) =
+    SparkJobs.during(df.collect().toSeq.map(_.toSeq))
 
   private def expected(df: DataFrame, view: String): Seq[Seq[Any]] = {
     df.createOrReplaceTempView(view)
